@@ -9,11 +9,12 @@ workdir is configured).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
 from dataclasses import asdict, dataclass, field
-from typing import Optional
+from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,10 +52,25 @@ class RecommenderInfo:
 
 
 class RecCatalog:
+    """Manifest plus the loaded model frames of each recommender's
+    current generation.
+
+    A generation is one version of a recommender's stored tables: every
+    ``put``, ``add_model_table`` and ``drop`` starts a new one and
+    drops the frames of the old one. Each table is read once per
+    generation (right after it is written, or on first use after a
+    restart), so serving a stored model never re-reads its parquet
+    footers. ``generation(name)`` is the key callers cache derived
+    plans under."""
+
     def __init__(self, workdir: Optional[str] = None):
         self.workdir = workdir
         self._mem: dict[str, RecommenderInfo] = {}
-        self._mem_models: dict[str, dict[str, DataFrame]] = {}
+        # name -> table key -> frame: parquet handles under a workdir,
+        # cached frames without one
+        self._models: dict[str, dict[str, DataFrame]] = {}
+        self._gen: dict[str, int] = {}
+        self._gen_seq = itertools.count(1)
         if workdir:
             os.makedirs(workdir, exist_ok=True)
             self._load_manifest()
@@ -91,21 +107,43 @@ class RecCatalog:
                 return i
         return None
 
+    def generation(self, name: str) -> int:
+        """Counter of ``name``'s stored tables, bumped on every write or
+        drop; 0 for a recommender not written by this catalog object
+        (one loaded from the manifest)."""
+        return self._gen.get(name, 0)
+
+    def _new_generation(self, name: str,
+                        keys: Optional[Iterable[str]] = None) -> None:
+        """Bump ``name``'s generation and release the frames of
+        ``keys`` (default: all). Cached frames hold executor storage,
+        so without the unpersist every threshold retrain leaks it."""
+        frames = self._models.get(name, {})
+        for key in list(frames if keys is None else keys):
+            df = frames.pop(key, None)
+            if df is not None and not self.workdir:
+                df.unpersist()
+        self._gen[name] = next(self._gen_seq)
+
+    def _store(self, name: str, key: str, df: DataFrame,
+               spark: SparkSession) -> None:
+        if self.workdir:
+            path = os.path.join(self.workdir, name, key)
+            df.write.mode("overwrite").parquet(path)
+            # the written schema is known: no footer-inference job
+            df = spark.read.schema(df.schema).parquet(path)
+        else:
+            df = df.cache()
+        self._models.setdefault(name, {})[key] = df
+
     def put(self, info: RecommenderInfo, models: dict[str, DataFrame],
             spark: SparkSession, replace: bool = False) -> None:
         if info.name in self._mem and not replace:
             raise ValueError(f"recommender {info.name!r} exists")
         info.model_tables = sorted(models.keys())
-        if self.workdir:
-            for key, df in models.items():
-                path = os.path.join(self.workdir, info.name, key)
-                df.write.mode("overwrite").parquet(path)
-        else:
-            # unpersist the replaced generation's cached models first or
-            # every threshold retrain leaks executor storage
-            for df in (self._mem_models.get(info.name) or {}).values():
-                df.unpersist()
-            self._mem_models[info.name] = {k: df.cache() for k, df in models.items()}
+        self._new_generation(info.name)
+        for key, df in models.items():
+            self._store(info.name, key, df, spark)
         self._mem[info.name] = info
         self._save_manifest()
 
@@ -114,21 +152,30 @@ class RecCatalog:
         """Add ONE model table without rewriting the others — required
         when the new table's plan lazily reads the existing parquet
         (overwriting a file you are reading truncates it mid-scan)."""
-        if self.workdir:
-            df.write.mode("overwrite").parquet(
-                os.path.join(self.workdir, info.name, key))
-        else:
-            self._mem_models[info.name][key] = df.cache()
+        self._new_generation(info.name, [key])
+        self._store(info.name, key, df, spark)
         if key not in info.model_tables:
             info.model_tables = sorted({*info.model_tables, key})
         self._mem[info.name] = info
         self._save_manifest()
 
-    def load_models(self, info: RecommenderInfo, spark: SparkSession) -> dict[str, DataFrame]:
-        if self.workdir:
-            return {k: spark.read.parquet(os.path.join(self.workdir, info.name, k))
-                    for k in info.model_tables}
-        return self._mem_models[info.name]
+    def load_models(self, info: RecommenderInfo, spark: SparkSession,
+                    keys: Optional[Iterable[str]] = None
+                    ) -> dict[str, DataFrame]:
+        """The current generation's frames for ``keys`` (default: every
+        stored table). Tables of a manifest-loaded recommender are read
+        on first use."""
+        loaded = self._models.setdefault(info.name, {})
+        out = {}
+        for key in (info.model_tables if keys is None else keys):
+            if key not in info.model_tables:
+                raise KeyError(f"recommender {info.name!r} has no "
+                               f"{key!r} table")
+            if key not in loaded:
+                loaded[key] = spark.read.parquet(
+                    os.path.join(self.workdir, info.name, key))
+            out[key] = loaded[key]
+        return out
 
     def update_meta(self, info: RecommenderInfo) -> None:
         self._mem[info.name] = info
@@ -138,10 +185,7 @@ class RecCatalog:
         if name not in self._mem:
             raise ValueError(f"no recommender {name!r}")  # utility.c:978-983 analog
         self._mem.pop(name)
-        for df_map in (self._mem_models.pop(name, None),):
-            if df_map:
-                for df in df_map.values():
-                    df.unpersist()
+        self._new_generation(name)
         if self.workdir:
             shutil.rmtree(os.path.join(self.workdir, name), ignore_errors=True)
         self._save_manifest()

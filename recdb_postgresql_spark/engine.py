@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import logging
 import os
+from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -24,6 +25,17 @@ from recdb_postgresql_spark.operators import cf, svd as svd_mod
 METHODS = ("itemcoscf", "itempearcf", "usercoscf", "userpearcf", "svd")
 
 logger = logging.getLogger(__name__)
+
+
+@dataclass
+class _ScoredPlan:
+    """A recommender's unfiltered scored frame plus what it was built
+    from: the catalog generation, the output columns and the events."""
+    generation: int
+    shape: tuple            # (userkey, itemkey, eventval, round_to)
+    events: DataFrame
+    files: tuple            # sorted events.inputFiles()
+    scored: DataFrame
 
 
 def get_spark(app: str = "recdb_spark", cpus: Optional[int] = None) -> SparkSession:
@@ -120,6 +132,13 @@ class RecEngine:
         # reference constants (recathon.c:2707,2788) — reducible for test speed
         self.svd_features = svd_features
         self.svd_epochs = svd_epochs
+        # per recommender, the scored frame of its current generation
+        # (see _plan_decision); one entry each, dropped with the
+        # recommender
+        self._scored: dict[str, _ScoredPlan] = {}
+        # how the last RECOMMEND got its scored plan: "reused",
+        # "rebuilt (<why>)", "on-the-fly" or "stored RecView"
+        self.last_plan: Optional[str] = None
 
     # ------------------------------------------------------------------
     # DDL surface
@@ -159,6 +178,7 @@ class RecEngine:
     def drop_recommender(self, name: str) -> None:
         """utility.c:956-1060 — drop model tables + catalog row."""
         self.catalog.drop(name)
+        self._scored.pop(name, None)
 
     # ------------------------------------------------------------------
     # Query surface
@@ -183,15 +203,38 @@ class RecEngine:
 
         Already-rated items are scored too (the reference's pending list
         holds *all* items — ``recathon.c:3942-3958``).
+
+        A stored recommender's unfiltered scored frame (``name`` given,
+        no ``user_where``/``where``/``k``/``ts_col``/``half_life``: the
+        RecSQL path) is built once and returned again while the
+        recommender's generation, the output columns and the events
+        snapshot stay the same (``_plan_decision``).
         """
         method = method.lower()
+        info = self.catalog.get(name) if name else None
+        plan, files, restricting = "on-the-fly", (), []
+        if info is not None:
+            method = info.method
+            # R16: materialized queries bump the query counter
+            # (execRecommend.c:831-836) and the rate-interval counter
+            info.query_counter += 1
+            info.query_counter2 += 1
+            self.catalog.update_meta(info)
+            restricting = [arg for arg, v in (
+                ("user_where", user_where), ("where", where), ("k", k),
+                ("ts_col", ts_col), ("half_life", half_life)) if v is not None]
+            shape = (userkey, itemkey, eventval, round_to)
+            plan, files = self._plan_decision(info, events, shape, restricting)
+        self.last_plan = plan
         if self.verbose_queries:
             # RecDBProperties.verbose_queries (utility.c:907): a pure
             # log knob — one strategy line per RECOMMEND, no semantics.
-            logger.info("RECOMMEND %s strategy=%s method=%s k=%s",
+            logger.info("RECOMMEND %s strategy=%s method=%s k=%s plan=%s",
                         name or "<on-the-fly>",
-                        "FilterRecommend" if name else "GenerateRecommend",
-                        method, k)
+                        "FilterRecommend" if info else "GenerateRecommend",
+                        method, k, plan)
+        if plan == "reused":
+            return self._scored[info.name].scored
         # NOT cached: each downstream use of `ratings` carries different
         # pushable predicates (user-WHERE prunes the rated-list branch at
         # the parquet scan); a cache would materialize the unfiltered
@@ -201,15 +244,9 @@ class RecEngine:
         ratings = cf.normalize_events(events, userkey, itemkey, eventval,
                                       ts_col=ts_col, half_life=half_life)
         ratings_full = None
-        info = self.catalog.get(name) if name else None
         if info is not None:
-            models = self.catalog.load_models(info, self.spark)
-            method = info.method
-            # R16: materialized queries bump the query counter
-            # (execRecommend.c:831-836) and the rate-interval counter
-            info.query_counter += 1
-            info.query_counter2 += 1
-            self.catalog.update_meta(info)
+            keys = ("user_model", "item_model") if method == "svd" else ("model",)
+            models = self.catalog.load_models(info, self.spark, keys)
         else:
             # on-the-fly "GenerateRecommend" path: train at query time.
             # The plan around the pair join stays lazy so the predict
@@ -274,7 +311,11 @@ class RecEngine:
         items = rf.select("item").distinct()
 
         if method == "itemcoscf" or method == "itempearcf":
-            scored = cf.predict_item_cf(models["model"], ratings, users, items)
+            # every user targeted: the rated rows are the ratings
+            # themselves, no users x ratings re-join
+            scored = (cf.predict_item_cf(models["model"], rf, None, items)
+                      if user_where is None else
+                      cf.predict_item_cf(models["model"], ratings, users, items))
         elif method == "usercoscf" or method == "userpearcf":
             scored = cf.predict_user_cf(models["model"], ratings, users, items,
                                         ratings_full=ratings_full)
@@ -295,7 +336,35 @@ class RecEngine:
         if k is not None:
             # TakeOrderedAndProject top-k; deterministic tie-break on keys
             out = out.orderBy(F.col(eventval).desc(), F.col(userkey), F.col(itemkey)).limit(k)
+        if info is not None and not restricting:
+            self._scored[info.name] = _ScoredPlan(
+                self.catalog.generation(info.name), shape, events, files, out)
         return out
+
+    def _plan_decision(self, info: RecommenderInfo, events: DataFrame,
+                       shape: tuple, restricting: list[str]) -> tuple[str, tuple]:
+        """Whether ``recommend`` can return the stored scored frame of
+        ``info``, and why not: ("reused" | "rebuilt (<why>)", sorted
+        input files of ``events``).
+
+        Reuse needs the same catalog generation (bumped by every model
+        write or drop), the same output columns, and the same events
+        snapshot: equal ``inputFiles()`` AND ``sameSemantics``. The file
+        list is required because a parquet scan compares by root path,
+        so a fresh read of a directory that has since grown would
+        otherwise match."""
+        if restricting:
+            return ("rebuilt (non-reusable arguments: "
+                    f"{', '.join(restricting)})", ())
+        files = tuple(sorted(events.inputFiles()))
+        prev = self._scored.get(info.name)
+        if prev is None or prev.generation != self.catalog.generation(info.name):
+            return "rebuilt (new generation)", files
+        if prev.shape != shape:
+            return "rebuilt (other columns)", files
+        if prev.files != files or not events.sameSemantics(prev.events):
+            return "rebuilt (events changed)", files
+        return "reused", files
 
     def materialize_predictions(self, name: str, events: DataFrame,
                                 k: Optional[int] = None,
@@ -304,9 +373,11 @@ class RecEngine:
         for a materialized recommender. The reference creates the
         RecView at CREATE time but its read path is gated off
         (execRecommend.c:935-940); here it is a working option:
-        ``recommend(..., name=n, use_view=True)`` becomes a pure
-        filter + top-k over the stored table — the right trade when
-        queries vastly outnumber model refreshes.
+        ``recommend_from_view(n)`` — and the RecSQL front door, which
+        routes a statement the capped view answers exactly to it
+        (IndexRecommend) — is a pure filter + top-k over the stored
+        table, the right trade when queries vastly outnumber model
+        refreshes.
 
         Scale contract: the stored view is capped to the top ``k``
         predictions PER USER (``k`` defaults from the engine's
@@ -378,7 +449,8 @@ class RecEngine:
                     f"rows the view never stored. Re-materialize with "
                     f"k>={k} (or full_grid=True), or score live with "
                     f"recommend().")
-        view = self.catalog.load_models(info, self.spark)["recview"]
+        view = self.catalog.load_models(info, self.spark, ["recview"])["recview"]
+        self.last_plan = "stored RecView"
         out = view.select(F.col("user").alias(info.userkey),
                           F.col("item").alias(info.itemkey),
                           F.col("score").alias(info.eventval))
@@ -412,7 +484,11 @@ class RecEngine:
 
         (The reference's remaining label, ``StandardRecommend`` for
         OP_NOFILTER, is never assigned anywhere in its parser — dead
-        enum value, not reproduced.)"""
+        enum value, not reproduced.)
+
+        The second line, ``Scored plan:``, is the ``last_plan`` decision
+        of that call: whether a stored model's scored plan was reused or
+        rebuilt and why (see ``recommend``)."""
         info = self.catalog.get(name) if name else None
         if use_view:
             if info is None:
@@ -433,7 +509,8 @@ class RecEngine:
                             else "GenerateRecommend")
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
-        return f"Recommend strategy: {strategy}\n{plan}"
+        return (f"Recommend strategy: {strategy}\n"
+                f"Scored plan: {self.last_plan}\n{plan}")
 
     # ------------------------------------------------------------------
     # Maintenance (R15): INSERT-hook counter + threshold retrain
@@ -491,12 +568,12 @@ class RecEngine:
         info = self.catalog.get(name)
         if info is None:
             raise ValueError(f"no recommender {name!r}")
-        models = self.catalog.load_models(info, self.spark)
-        if "item_model" not in models:
+        if "item_model" not in info.model_tables:
             raise ValueError(f"{name!r} is not a factor-model "
                              "recommender (no item_model) — fold-in "
                              "needs fixed item factors")
-        im = models["item_model"]
+        im = self.catalog.load_models(info, self.spark,
+                                      ["item_model"])["item_model"]
         nr = cf.normalize_events(new_ratings, info.userkey,
                                  info.itemkey, info.eventval)
         # Fold-in inner-joins the new events to the STORED item

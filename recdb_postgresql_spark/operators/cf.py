@@ -304,28 +304,43 @@ def symmetrize(model: DataFrame, k1: str, k2: str) -> DataFrame:
     return up.unionByName(dn)
 
 
-def predict_item_cf(model: DataFrame, ratings: DataFrame, users: DataFrame,
-                    items: DataFrame) -> DataFrame:
+def predict_item_cf(model: DataFrame, ratings: DataFrame,
+                    users: DataFrame | None, items: DataFrame) -> DataFrame:
     """score(u,i) = sum_j sim(i,j)*r(u,j) / sum_j |sim(i,j)| over the
     target user's rated items j (recathon.c:4235-4295). Pairs with no
     overlapping similarity score 0 (itemCFpredict returns 0 when
-    totalSim == 0).
+    totalSim == 0). ``users=None`` targets every user in ``ratings``.
 
-    Plan shape: rated x sym-model join on the rated item, then a single
-    groupBy (user, item). The user x item cross product is never
-    materialized; the left join against it only fills the zero scores.
-    `items` is tiny relative to events — broadcast.
+    Plan shape: ONE groupBy (user, item) over the union of the
+    users x items grid (zero-valued rows, flagged) and the
+    rated x sym-model contributions sim*r and |sim|; only flagged
+    groups are emitted, score = num/den, or 0 where den is 0. The grid
+    and the contributions share that single shuffle instead of a
+    contribution aggregate plus a grid join. `items` is tiny relative
+    to events — broadcast.
     """
-    rated = users.withColumnRenamed("user", "u").join(
-        ratings, F.col("u") == F.col("user")).select("user", "item", "rating")
+    if users is None:
+        rated, users = ratings, ratings.select("user").distinct()
+    else:
+        rated = users.withColumnRenamed("user", "u").join(
+            ratings, F.col("u") == F.col("user")).select("user", "item", "rating")
     sym = symmetrize(model, "item1", "item2")
-    contrib = (rated.join(sym, rated["item"] == sym["b"])
-               .groupBy("user", F.col("a").alias("item"))
-               .agg((F.sum(F.col("similarity") * F.col("rating"))
-                     / F.sum(F.abs(F.col("similarity")))).alias("score")))
-    grid = users.crossJoin(F.broadcast(items))
-    return (grid.join(contrib, ["user", "item"], "left")
-            .select("user", "item", F.coalesce("score", F.lit(0.0)).alias("score")))
+    contrib = rated.join(sym, rated["item"] == sym["b"]).select(
+        "user", F.col("a").alias("item"),
+        (F.col("similarity") * F.col("rating")).alias("num"),
+        F.abs(F.col("similarity")).alias("den"),
+        F.lit(False).alias("in_grid"))
+    grid = users.crossJoin(F.broadcast(items)).select(
+        "user", "item", F.lit(0.0).alias("num"), F.lit(0.0).alias("den"),
+        F.lit(True).alias("in_grid"))
+    return (grid.unionByName(contrib)
+            .groupBy("user", "item")
+            .agg(F.sum("num").alias("num"), F.sum("den").alias("den"),
+                 F.max("in_grid").alias("in_grid"))
+            .where(F.col("in_grid"))
+            .select("user", "item",
+                    F.when(F.col("den") != 0, F.col("num") / F.col("den"))
+                    .otherwise(F.lit(0.0)).alias("score")))
 
 
 def predict_user_cf(model: DataFrame, ratings: DataFrame, users: DataFrame,

@@ -431,7 +431,7 @@ class RecSQL:
             # RecView is materialized AND the statement is provably
             # answerable from the capped view, substitute the stored
             # predictions instead of re-scoring. Exactness argument in
-            # _view_route_exact.
+            # _try_view_route.
             scored = self._try_view_route(m, hit, ev, ucol, icol, ecol)
         if scored is not None:
             self.last_strategy = "IndexRecommend"
@@ -442,9 +442,10 @@ class RecSQL:
                 events_df, ucol, icol, ecol,
                 m["method"].lower(), name=hit.name if hit else None)
         if self.engine.verbose_queries:
-            logger.info("RECOMMEND (SQL) %s strategy=%s method=%s",
+            logger.info("RECOMMEND (SQL) %s strategy=%s method=%s plan=%s",
                         hit.name if hit else "<on-the-fly>",
-                        self.last_strategy, m["method"].lower())
+                        self.last_strategy, m["method"].lower(),
+                        self.engine.last_plan)
 
         RecSQL._view_seq += 1
         view = f"__rec_scored_{RecSQL._view_seq}"
@@ -459,4 +460,9 @@ class RecSQL:
                     + m["from"][ev.end:])
         rest = re.sub(r"\bILIKE\b", "ilike", m["rest"] or "", flags=re.IGNORECASE)
         plain = f"SELECT {m['select']} FROM {new_from}{rest}"
-        return self.spark.sql(plain)
+        try:
+            return self.spark.sql(plain)
+        finally:
+            # spark.sql analyzes eagerly, so the returned frame no
+            # longer needs the view; keeping it leaks one per statement
+            self.spark.catalog.dropTempView(view)
