@@ -41,7 +41,14 @@ class _ScoredPlan:
 def get_spark(app: str = "recdb_spark", cpus: Optional[int] = None) -> SparkSession:
     """Local session tuned for the test harness (local[32], 32 shuffle
     partitions, AQE on). On a real cluster the same code runs unchanged;
-    only master/conf differ."""
+    only master/conf differ.
+
+    DataFrame origin capture is off: with it on, PySpark records the
+    Python call site of every DataFrame/Column call through extra py4j
+    round trips (about two thirds of the 1,500-1,900 that building one
+    on-the-fly RECOMMEND statement makes). Only error messages lose
+    that call-site text; a session built with
+    ``spark.python.sql.dataFrameDebugging.enabled=true`` gets it back."""
     n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     return (
         SparkSession.builder.master(f"local[{n}]")
@@ -54,6 +61,7 @@ def get_spark(app: str = "recdb_spark", cpus: Optional[int] = None) -> SparkSess
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
 
@@ -249,9 +257,13 @@ class RecEngine:
             models = self.catalog.load_models(info, self.spark, keys)
         else:
             # on-the-fly "GenerateRecommend" path: train at query time.
-            # The plan around the pair join stays lazy so the predict
-            # join pushes the user filter through symmetrize() into the
-            # e1 pair side (measured: caching the full user-CF model at
+            # The caller splits its WHERE explicitly: only the user-only
+            # conjuncts arrive here, as `user_where` (RecSQL derives
+            # them from the statement's WHERE, parse_rec.c:1109-1211).
+            # They filter the target users below, and for user-CF the
+            # predict join carries that filter through symmetrize()
+            # into the e1 pair side, so only the target users' pairs
+            # are built (measured: caching the full user-CF model at
             # sf0.1 made it 4x slower) — but every OTHER consumer of
             # the normalized ratings (the e2 pair side, norms/means,
             # neighbor ratings, the item dimension) reads them in FULL,
@@ -304,18 +316,19 @@ class RecEngine:
             else:
                 models = self._train_ratings(ratings_full, method)
         rf = ratings_full if ratings_full is not None else ratings
-        users = rf.select("user").distinct()
-        if user_where is not None:
-            users = ratings.select(F.col("user").alias(userkey)).distinct() \
-                .filter(user_where).select(F.col(userkey).alias("user"))
+        # the target users' ratings: user_where names the user column
+        # as the caller's events do, and filters the lazy ratings so it
+        # reaches their scan
+        rated = rf if user_where is None else (
+            ratings.withColumnRenamed("user", userkey).filter(user_where)
+            .withColumnRenamed(userkey, "user"))
+        users = rated.select("user").distinct()
         items = rf.select("item").distinct()
 
         if method == "itemcoscf" or method == "itempearcf":
-            # every user targeted: the rated rows are the ratings
-            # themselves, no users x ratings re-join
-            scored = (cf.predict_item_cf(models["model"], rf, None, items)
-                      if user_where is None else
-                      cf.predict_item_cf(models["model"], ratings, users, items))
+            # the rated rows are the target ratings themselves, no
+            # users x ratings re-join
+            scored = cf.predict_item_cf(models["model"], rated, None, items)
         elif method == "usercoscf" or method == "userpearcf":
             scored = cf.predict_user_cf(models["model"], ratings, users, items,
                                         ratings_full=ratings_full)
@@ -466,7 +479,8 @@ class RecEngine:
                 name: Optional[str] = None,
                 join_with: Optional[DataFrame] = None,
                 join_on: Optional[Column] = None,
-                use_view: bool = False) -> str:
+                use_view: bool = False,
+                user_where: Optional[Column] = None) -> str:
         """R19 (explain.c:767-793): report the chosen rec-strategy plus
         Spark's formatted physical plan. Strategy labels mirror the
         reference's opType switch exactly:
@@ -488,17 +502,20 @@ class RecEngine:
 
         The second line, ``Scored plan:``, is the ``last_plan`` decision
         of that call: whether a stored model's scored plan was reused or
-        rebuilt and why (see ``recommend``)."""
+        rebuilt and why (see ``recommend``). The third, ``User filter:``,
+        is the user-only predicate pushed into the model build
+        (``user_where``), or why there is none."""
         info = self.catalog.get(name) if name else None
         if use_view:
             if info is None:
                 raise ValueError("IndexRecommend explain needs a "
                                  "materialized recommender name")
             strategy = "IndexRecommend"
-            df = self.recommend_from_view(name, allow_capped=True)
+            df = self.recommend_from_view(name, user_where=user_where,
+                                          allow_capped=True)
         else:
             df = self.recommend(events, userkey, itemkey, eventval, method,
-                                name=name)
+                                name=name, user_where=user_where)
             if join_with is not None:
                 strategy = ("JoinRecommend" if info is not None
                             else "GenerateJoinRecommend")
@@ -507,10 +524,17 @@ class RecEngine:
             else:
                 strategy = ("FilterRecommend" if info is not None
                             else "GenerateRecommend")
+        if user_where is not None:
+            pushed = f"{user_where._jc.toString()} (pushed into the build)"
+        elif info is not None:
+            pushed = "none (materialized route)"
+        else:
+            pushed = "none (no WHERE)"
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
         return (f"Recommend strategy: {strategy}\n"
-                f"Scored plan: {self.last_plan}\n{plan}")
+                f"Scored plan: {self.last_plan}\n"
+                f"User filter: {pushed}\n{plan}")
 
     # ------------------------------------------------------------------
     # Maintenance (R15): INSERT-hook counter + threshold retrain

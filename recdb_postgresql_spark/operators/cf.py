@@ -298,7 +298,9 @@ def train_user_pearson(ratings: DataFrame,
 
 def symmetrize(model: DataFrame, k1: str, k2: str) -> DataFrame:
     """The model stores the upper triangle (recathon.c:1469-1495);
-    prediction needs both directions."""
+    prediction needs both directions. A union of two projections, so a
+    filter on ``a`` (the user-CF target) reaches each leg's pair build
+    as a filter on one pair side."""
     up = model.select(F.col(k1).alias("a"), F.col(k2).alias("b"), "similarity")
     dn = model.select(F.col(k2).alias("a"), F.col(k1).alias("b"), "similarity")
     return up.unionByName(dn)
@@ -317,14 +319,21 @@ def predict_item_cf(model: DataFrame, ratings: DataFrame,
     groups are emitted, score = num/den, or 0 where den is 0. The grid
     and the contributions share that single shuffle instead of a
     contribution aggregate plus a grid join. `items` is tiny relative
-    to events — broadcast.
+    to events — broadcast. The model is read once: each stored pair is
+    flipped into both directions by one explode, not by
+    ``symmetrize``'s union of two reads (no user predicate can reach
+    an item-keyed model, so the union would buy nothing here).
     """
     if users is None:
         rated, users = ratings, ratings.select("user").distinct()
     else:
         rated = users.withColumnRenamed("user", "u").join(
             ratings, F.col("u") == F.col("user")).select("user", "item", "rating")
-    sym = symmetrize(model, "item1", "item2")
+    pair = F.explode(F.array(
+        F.struct(F.col("item1").alias("a"), F.col("item2").alias("b")),
+        F.struct(F.col("item2").alias("a"), F.col("item1").alias("b"))))
+    sym = (model.select(pair.alias("p"), "similarity")
+           .select("p.a", "p.b", "similarity"))
     contrib = rated.join(sym, rated["item"] == sym["b"]).select(
         "user", F.col("a").alias("item"),
         (F.col("similarity") * F.col("rating")).alias("num"),

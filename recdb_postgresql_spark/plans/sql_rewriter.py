@@ -12,10 +12,19 @@ remaining, now-plain SQL to ``spark.sql``.
 
 The reference splits the WHERE into user-only vs residual conjuncts at
 parse time (TRUE-substitution, ``parse_rec.c:1109-1211``) so user
-predicates prune *before* scoring. Here the scored view is lazy, so
-Catalyst performs exactly that split automatically: predicates on the
-user column push down through the score join into the model build.
-``_split_where`` is retained for explicit DataFrame-API callers.
+predicates prune *before* scoring. Catalyst does not do that split for
+us: a WHERE over the scored view does not reach the on-the-fly model
+build (without the split, a user-CF statement for one user builds the
+whole user x user model). So ``_pushdown`` splits it explicitly, on
+the on-the-fly route only: the user-only conjuncts (events alias
+stripped, ``_split_where``) go to ``RecEngine.recommend`` as
+``user_where`` and prune the build, while the full WHERE still runs
+over the scored view. Nothing is pushed
+when the WHERE has a top-level OR or a subquery, when the events source
+is a subquery, or when the events item is on the null-supplying side
+of an outer join (a null-accepting conjunct such as ``userid IS NULL``
+would then turn matched rows into null-extended ones). A conjunct that
+names any qualifier but the events alias is residual.
 
 Supported statements (the whole reference regression suite,
 ``PostgreSQL/recdb_regression_test.sql``)::
@@ -49,6 +58,7 @@ import re
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from recdb_postgresql_spark.engine import RecEngine
 
@@ -78,10 +88,11 @@ def _top_level_conjuncts(where: str) -> Optional[list[str]]:
 
     Single-quoted literals (with ``''`` escapes) and double-quoted
     identifiers are opaque: ``name = 'rock AND roll'`` is ONE conjunct,
-    and an ``'OR'`` inside a literal does not force the residual path."""
+    and an ``'OR'`` inside a literal does not force the residual path.
+    The AND of a top-level ``BETWEEN x AND y`` belongs to it, not a cut."""
     up = where.upper()
     depth = 0
-    cuts, has_or = [], False
+    cuts, has_or, between = [], False, False
     i = 0
     while i < len(up):
         c = up[i]
@@ -102,10 +113,14 @@ def _top_level_conjuncts(where: str) -> Optional[list[str]]:
         elif c == ")":
             depth -= 1
         elif depth == 0 and c.isspace():
-            m = re.match(r"\s+(AND|OR)\s+", up[i:])
+            m = re.match(r"\s+(AND|OR|BETWEEN)\s+", up[i:])
             if m:
                 if m.group(1) == "OR":
                     has_or = True
+                elif m.group(1) == "BETWEEN":
+                    between = True
+                elif between:
+                    between = False
                 else:
                     cuts.append((i, i + m.end()))
                 i += m.end()
@@ -123,10 +138,12 @@ def _top_level_conjuncts(where: str) -> Optional[list[str]]:
 
 def _split_where(where: Optional[str], ucol: str) -> tuple[Optional[str], Optional[str]]:
     """Split top-level AND conjuncts into user-only vs residual — the
-    TRUE-substitution rewrite of ``parse_rec.c:1109-1211``. Used by
-    DataFrame-API callers; the SQL path gets this from Catalyst.
-    A clause with a top-level OR is not conjunct-splittable and comes
-    back whole as the residual."""
+    TRUE-substitution rewrite of ``parse_rec.c:1109-1211``. A conjunct
+    is user-only when its only identifier is ``ucol`` (any case, as
+    Spark resolves it); function names count as identifiers, so
+    ``coalesce(userid, 0) = 0`` is residual. A clause with a top-level
+    OR is not conjunct-splittable and comes back whole as the
+    residual."""
     if not where:
         return None, None
     conjuncts = _top_level_conjuncts(where)
@@ -139,9 +156,9 @@ def _split_where(where: Optional[str], ucol: str) -> tuple[Optional[str], Option
         # words inside string literals are values, not identifiers:
         # ``u = 'the thing'`` must still classify as a user predicate
         unquoted = re.sub(r"'(?:[^']|'')*'", "''", c)
-        idents = {x for x in re.findall(r"[A-Za-z_]\w*", unquoted)
-                  if x.lower() not in keywords and not x.isdigit()}
-        (user_parts if idents <= {ucol} else rest_parts).append(c)
+        idents = {x.lower() for x in re.findall(r"[A-Za-z_]\w*", unquoted)
+                  if x.lower() not in keywords}
+        (user_parts if idents <= {ucol.lower()} else rest_parts).append(c)
     return (" AND ".join(user_parts) or None, " AND ".join(rest_parts) or None)
 
 
@@ -153,17 +170,31 @@ _JOIN_KW_RE = re.compile(
 
 class _FromItem:
     """One FROM item: a table or a parenthesized subquery, with its
-    alias and the [start, end) span of the item core (table/subquery +
-    alias, EXCLUDING any trailing ON condition) in the FROM text."""
+    alias, the [start, end) span of the item core (table/subquery +
+    alias, EXCLUDING any trailing ON condition) in the FROM text, and
+    how it joins the items before it."""
 
-    __slots__ = ("table", "alias", "subquery", "start", "end")
+    __slots__ = ("table", "alias", "subquery", "start", "end", "join")
 
-    def __init__(self, table, alias, subquery, start, end):
+    def __init__(self, table, alias, subquery, start, end, join):
         self.table = table          # None for subqueries
         self.alias = alias
         self.subquery = subquery    # inner SELECT text, None for tables
         self.start = start
         self.end = end
+        # None (first item), "," or the JOIN kind: INNER, LEFT, RIGHT,
+        # FULL or CROSS
+        self.join = join
+
+
+def _join_kind(sep: str) -> str:
+    """The kind of a FROM separator: "," or that of a JOIN keyword run
+    (``NATURAL LEFT OUTER JOIN`` -> LEFT)."""
+    if sep == ",":
+        return ","
+    words = sep.upper().split()
+    return next((w for w in words if w in ("LEFT", "RIGHT", "FULL", "CROSS")),
+                "INNER")
 
 
 def _scan_state(s: str):
@@ -214,14 +245,14 @@ def _parse_from(from_sql: str) -> list[_FromItem]:
     seps += [(i, i + 1) for i, c in enumerate(from_sql)
              if c == "," and top_level(i)]
     seps.sort()
-    bounds, last = [], 0
+    bounds, last, join = [], 0, None
     for a, b in seps:
-        bounds.append((last, a))
-        last = b
-    bounds.append((last, len(from_sql)))
+        bounds.append((last, a, join))
+        last, join = b, _join_kind(from_sql[a:b])
+    bounds.append((last, len(from_sql), join))
 
     out = []
-    for seg_start, seg_end in bounds:
+    for seg_start, seg_end, join in bounds:
         seg = from_sql[seg_start:seg_end]
         # strip the ON condition: first top-level ON keyword in the seg
         on_at = None
@@ -261,14 +292,88 @@ def _parse_from(from_sql: str) -> list[_FromItem]:
             if not alias:
                 raise ValueError(
                     f"subquery FROM item needs an alias: {stripped!r}")
-            out.append(_FromItem(None, alias, inner.strip(), lead, span_end))
+            out.append(_FromItem(None, alias, inner.strip(), lead, span_end,
+                                 join))
         else:
             toks = stripped.split()
             table = toks[0]
             alias = (toks[-1] if len(toks) > 1 and toks[-1].upper() != "AS"
                      else table)
-            out.append(_FromItem(table, alias, None, lead, span_end))
+            out.append(_FromItem(table, alias, None, lead, span_end, join))
     return out
+
+
+def _null_supplied(items: list[_FromItem], ev: _FromItem) -> bool:
+    """Whether ``ev`` is on the null-supplying side of an outer join.
+    JOIN binds tighter than ",", and a chain of JOINs is left-deep, so
+    within its comma group ``ev`` is null-supplied by its own LEFT/FULL
+    JOIN or by any later RIGHT/FULL JOIN."""
+    i = items.index(ev)
+    later = []
+    for it in items[i + 1:]:
+        if it.join == ",":
+            break
+        later.append(it.join)
+    return ev.join in ("LEFT", "FULL") or any(j in ("RIGHT", "FULL")
+                                              for j in later)
+
+
+# clauses that may follow a WHERE in a RECOMMEND statement's tail
+_WHERE_END_RE = re.compile(
+    r"\b(?:ORDER\s+BY|SORT\s+BY|CLUSTER\s+BY|DISTRIBUTE\s+BY|LIMIT|OFFSET"
+    r"|UNION|INTERSECT|EXCEPT|MINUS)\b", re.IGNORECASE)
+
+
+def _where_text(rest: str) -> Optional[str]:
+    """The WHERE condition of a statement tail (``WHERE ... ORDER BY
+    ... LIMIT n``), or None. The condition ends at the first top-level
+    clause keyword outside a quoted span."""
+    m = re.match(r"\s*WHERE\b", rest, re.IGNORECASE)
+    if m is None:
+        return None
+    body = rest[m.end():]
+    depth, quoted = _scan_state(body)
+    for e in _WHERE_END_RE.finditer(body):
+        if depth[e.start()] == 0 and not quoted[e.start()]:
+            body = body[:e.start()]
+            break
+    return body.strip() or None
+
+
+def _unqualify(sql: str, names: set[str]) -> str:
+    """Drop the ``<name>.`` qualifiers of ``names`` outside quoted
+    spans: ``r.userid = 'r.x'`` -> ``userid = 'r.x'``."""
+    _, quoted = _scan_state(sql)
+    rx = re.compile(r"\b(?:" + "|".join(re.escape(n) for n in names) + r")\.",
+                    re.IGNORECASE)
+    return rx.sub(lambda q: q.group(0) if quoted[q.start()] else "", sql)
+
+
+def _pushdown(rest: str, items: list[_FromItem], ev: _FromItem,
+              ucol: str) -> tuple[Optional[str], str]:
+    """(user-only conjuncts to push into an on-the-fly build, or
+    None; what was pushed or why nothing was). Pushing a conjunct
+    that the full WHERE applies again only drops scored rows the
+    WHERE would drop — unless ``ev`` is null-supplied by an outer
+    join, where pruning it changes which rows get null-extended."""
+    if ev.subquery is not None:
+        return None, "none (subquery events source)"
+    where = _where_text(rest)
+    if where is None:
+        return None, "none (no WHERE)"
+    _, quoted = _scan_state(where)
+    if any(not quoted[w.start()]
+           for w in re.finditer(r"\bSELECT\b", where, re.IGNORECASE)):
+        return None, "none (subquery)"
+    if _null_supplied(items, ev):
+        return None, "none (outer join)"
+    bare = _unqualify(where, {a for a in (ev.alias, ev.table) if a})
+    if _top_level_conjuncts(bare) is None:
+        return None, "none (OR)"
+    user, _ = _split_where(bare, ucol)
+    if user is None:
+        return None, "none (no user-only conjunct)"
+    return user, user
 
 
 class RecSQL:
@@ -287,6 +392,9 @@ class RecSQL:
         # front door executed (GenerateRecommend / FilterRecommend /
         # IndexRecommend) — observable for tests and verbose logging
         self.last_strategy: Optional[str] = None
+        # the user-only conjuncts that statement pushed into the model
+        # build, or "none (<why>)"
+        self.last_pushdown: Optional[str] = None
 
     def _try_view_route(self, m: re.Match, hit, ev, ucol: str, icol: str,
                         ecol: str) -> Optional[DataFrame]:
@@ -326,10 +434,8 @@ class RecSQL:
             # the events alias as a qualifier (stripped for the check)
             where = tail["where"]
             if where:
-                aliases = {a for a in (ev.alias, ev.table) if a}
-                bare = re.sub(
-                    r"\b(" + "|".join(re.escape(a) for a in aliases)
-                    + r")\.", "", where, flags=re.IGNORECASE)
+                bare = _unqualify(where,
+                                  {a for a in (ev.alias, ev.table) if a})
                 _, residual = _split_where(bare, ucol)
                 if residual is not None:
                     return None
@@ -424,8 +530,12 @@ class RecSQL:
             # OP_FILTER
             hit = self.engine.catalog.find(m["method"].lower(),
                                            ev.table.lower())
-        scored = None
-        if hit is not None:
+        scored, user_sql = None, None
+        if hit is None:
+            user_sql, self.last_pushdown = _pushdown(
+                m["rest"] or "", items, ev, ucol)
+        else:
+            self.last_pushdown = "none (materialized route)"
             # IndexRecommend auto-route (R19 / execRecommend.c:151-294,
             # the read path the reference gates off at 935-940): when a
             # RecView is materialized AND the statement is provably
@@ -440,12 +550,14 @@ class RecSQL:
                                   else "GenerateRecommend")
             scored = self.engine.recommend(
                 events_df, ucol, icol, ecol,
-                m["method"].lower(), name=hit.name if hit else None)
+                m["method"].lower(), name=hit.name if hit else None,
+                user_where=F.expr(user_sql) if user_sql else None)
         if self.engine.verbose_queries:
-            logger.info("RECOMMEND (SQL) %s strategy=%s method=%s plan=%s",
+            logger.info("RECOMMEND (SQL) %s strategy=%s method=%s plan=%s "
+                        "user_where=%s",
                         hit.name if hit else "<on-the-fly>",
                         self.last_strategy, m["method"].lower(),
-                        self.engine.last_plan)
+                        self.engine.last_plan, self.last_pushdown)
 
         RecSQL._view_seq += 1
         view = f"__rec_scored_{RecSQL._view_seq}"

@@ -24,6 +24,9 @@ def test_where_split_true_substitution():
     assert rest == "itemid < 7 AND ratingval >= 4"
     assert _split_where(None, "userid") == (None, None)
     assert _split_where("itemid = 3", "userid") == (None, "itemid = 3")
+    # the AND of a BETWEEN belongs to it
+    assert _split_where("itemid BETWEEN 1 AND userid", "userid") == \
+        (None, "itemid BETWEEN 1 AND userid")
 
 
 def test_recommend_grammar_end_to_end(rs):
