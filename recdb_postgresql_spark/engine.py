@@ -503,8 +503,9 @@ class RecEngine:
         The second line, ``Scored plan:``, is the ``last_plan`` decision
         of that call: whether a stored model's scored plan was reused or
         rebuilt and why (see ``recommend``). The third, ``User filter:``,
-        is the user-only predicate pushed into the model build
-        (``user_where``), or why there is none."""
+        is ``user_where``: pushed into the model build, or a filter over
+        the RecView with ``use_view``; ``none`` without one (why a
+        RecSQL statement pushed nothing is ``RecSQL.last_pushdown``)."""
         info = self.catalog.get(name) if name else None
         if use_view:
             if info is None:
@@ -524,12 +525,11 @@ class RecEngine:
             else:
                 strategy = ("FilterRecommend" if info is not None
                             else "GenerateRecommend")
-        if user_where is not None:
-            pushed = f"{user_where._jc.toString()} (pushed into the build)"
-        elif info is not None:
-            pushed = "none (materialized route)"
+        if user_where is None:
+            pushed = "none"
         else:
-            pushed = "none (no WHERE)"
+            pushed = user_where._jc.toString() + (
+                " (view filter)" if use_view else " (pushed into the build)")
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
         return (f"Recommend strategy: {strategy}\n"

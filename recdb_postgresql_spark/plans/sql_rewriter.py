@@ -79,54 +79,53 @@ _REC_RE = re.compile(
     re.IGNORECASE | re.DOTALL)
 
 
-def _top_level_conjuncts(where: str) -> Optional[list[str]]:
-    """Split on AND at parenthesis depth 0 only, skipping quoted spans.
-    Returns None when a top-level OR is present: ``a = 1 OR b = 2 AND
-    c = 3`` parses as ``a OR (b AND c)``, so splitting its ANDs would
-    change semantics — the caller must then treat the whole clause as
-    residual.
+# the words that cut, join or nest conjuncts; a word preceded by a
+# letter, digit, "_" or "." is part of an identifier (Spark lexes
+# ``1OR`` as one identifier, and ``t.end`` is a column)
+_CONJ_WORD_RE = re.compile(r"(?<![\w.])(AND|OR|BETWEEN|CASE|END)\b",
+                           re.IGNORECASE)
 
-    Single-quoted literals (with ``''`` escapes) and double-quoted
-    identifiers are opaque: ``name = 'rock AND roll'`` is ONE conjunct,
-    and an ``'OR'`` inside a literal does not force the residual path.
-    The AND of a top-level ``BETWEEN x AND y`` belongs to it, not a cut."""
-    up = where.upper()
-    depth = 0
-    cuts, has_or, between = [], False, False
-    i = 0
-    while i < len(up):
-        c = up[i]
-        if c in ("'", '"'):
-            q = c
-            i += 1
-            while i < len(up):
-                if up[i] == q:
-                    if q == "'" and i + 1 < len(up) and up[i + 1] == "'":
-                        i += 2  # '' escape inside a string literal
-                        continue
-                    i += 1
-                    break
-                i += 1
+
+def _top_level_conjuncts(where: str) -> Optional[list[str]]:
+    """Split on the AND words at parenthesis depth 0 outside quoted
+    spans and CASE ... END. Returns None when a top-level OR is
+    present: ``a = 1 OR b = 2 AND c = 3`` parses as ``a OR (b AND
+    c)``, so splitting its ANDs would change semantics — the caller
+    must then treat the whole clause as residual. A comment, an
+    unclosed quote and unbalanced parentheses or CASE/END also return
+    None.
+
+    AND/OR are words, not whitespace-delimited: ``a = 1 AND b = 2
+    OR(c = 3)`` has a top-level OR. Quoted spans are opaque
+    (``_scan_state``): ``name = 'rock AND roll'`` is ONE conjunct. A
+    CASE expression is one unit: the ANDs of ``CASE WHEN a AND b THEN
+    ... END`` are not cuts. The AND of a top-level ``BETWEEN x AND y``
+    belongs to it, not a cut."""
+    depth, quoted = _scan_state(where)
+    if quoted[len(where)] or any(not quoted[c.start()]
+                                 for c in re.finditer(r"--|/\*", where)):
+        return None
+    cuts, case, between = [], 0, False
+    for m in _CONJ_WORD_RE.finditer(where):
+        if quoted[m.start()]:
             continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and c.isspace():
-            m = re.match(r"\s+(AND|OR|BETWEEN)\s+", up[i:])
-            if m:
-                if m.group(1) == "OR":
-                    has_or = True
-                elif m.group(1) == "BETWEEN":
-                    between = True
-                elif between:
-                    between = False
-                else:
-                    cuts.append((i, i + m.end()))
-                i += m.end()
-                continue
-        i += 1
-    if has_or:
+        word = m.group(1).upper()
+        if word in ("CASE", "END"):
+            case += 1 if word == "CASE" else -1
+            if case < 0:
+                return None
+            continue
+        if depth[m.start()] != 0 or case:
+            continue
+        if word == "OR":
+            return None
+        if word == "BETWEEN":
+            between = True
+        elif between:
+            between = False
+        else:
+            cuts.append((m.start(), m.end()))
+    if case or depth[len(where)] != 0:
         return None
     parts, start = [], 0
     for a, b in cuts:
@@ -140,10 +139,10 @@ def _split_where(where: Optional[str], ucol: str) -> tuple[Optional[str], Option
     """Split top-level AND conjuncts into user-only vs residual — the
     TRUE-substitution rewrite of ``parse_rec.c:1109-1211``. A conjunct
     is user-only when its only identifier is ``ucol`` (any case, as
-    Spark resolves it); function names count as identifiers, so
-    ``coalesce(userid, 0) = 0`` is residual. A clause with a top-level
-    OR is not conjunct-splittable and comes back whole as the
-    residual."""
+    Spark resolves it); function names and words like CASE count as
+    identifiers, so ``coalesce(userid, 0) = 0`` is residual. A clause
+    that is not a conjunction (``_top_level_conjuncts``) comes back
+    whole as the residual."""
     if not where:
         return None, None
     conjuncts = _top_level_conjuncts(where)
@@ -155,7 +154,10 @@ def _split_where(where: Optional[str], ucol: str) -> tuple[Optional[str], Option
     for c in conjuncts:
         # words inside string literals are values, not identifiers:
         # ``u = 'the thing'`` must still classify as a user predicate
-        unquoted = re.sub(r"'(?:[^']|'')*'", "''", c)
+        # (double-quoted spans stay: they may be identifiers)
+        _, quoted = _scan_state(c)
+        unquoted = "".join(" " if quoted[k] == "'" else ch
+                           for k, ch in enumerate(c))
         idents = {x.lower() for x in re.findall(r"[A-Za-z_]\w*", unquoted)
                   if x.lower() not in keywords}
         (user_parts if idents <= {ucol.lower()} else rest_parts).append(c)
@@ -198,35 +200,37 @@ def _join_kind(sep: str) -> str:
 
 
 def _scan_state(s: str):
-    """depth[i] = paren depth BEFORE s[i]; quoted[i] = inside a quoted
-    span (single-quoted literal with '' escapes, or double-quoted
-    identifier)."""
-    depth = [0] * (len(s) + 1)
-    quoted = [False] * (len(s) + 1)
-    d = 0
-    inq = None
-    i = 0
-    while i < len(s):
+    """depth[i] = paren depth BEFORE s[i]; quoted[i] = the quote
+    character of the quoted span s[i] is in, "" outside one
+    (quoted[len(s)]: the quote left open at the end). Spans are
+    lexed as Spark does: single- and double-quoted with backslash and
+    doubled-quote escapes (``'it\\'s'``, ``'it''s'``), backquoted
+    identifiers with the doubled-backquote escape."""
+    n = len(s)
+    depth = [0] * (n + 1)
+    quoted = [""] * (n + 1)
+    d, q, i = 0, "", 0
+    while i < n:
         depth[i] = d
         c = s[i]
-        if inq:
-            quoted[i] = True
-            if c == inq:
-                if inq == "'" and i + 1 < len(s) and s[i + 1] == "'":
-                    quoted[i + 1] = True
-                    i += 2
-                    depth[i - 1] = d
-                    continue
-                inq = None
-        elif c in ("'", '"'):
-            quoted[i] = True
-            inq = c
+        if q:
+            quoted[i] = q
+            if (c == "\\" and q != "`" or c == q and s[i + 1:i + 2] == q) \
+                    and i + 1 < n:
+                # the escaped character stays in the span
+                depth[i + 1], quoted[i + 1] = d, q
+                i += 2
+                continue
+            if c == q:
+                q = ""
+        elif c in ("'", '"', "`"):
+            quoted[i] = q = c
         elif c == "(":
             d += 1
         elif c == ")":
             d -= 1
         i += 1
-    depth[len(s)] = d
+    depth[n], quoted[n] = d, q
     return depth, quoted
 
 
@@ -340,12 +344,11 @@ def _where_text(rest: str) -> Optional[str]:
     return body.strip() or None
 
 
-def _unqualify(sql: str, names: set[str]) -> str:
-    """Drop the ``<name>.`` qualifiers of ``names`` outside quoted
-    spans: ``r.userid = 'r.x'`` -> ``userid = 'r.x'``."""
+def _unqualify(sql: str, name: str) -> str:
+    """Drop the ``<name>.`` qualifiers outside quoted spans:
+    ``r.userid = 'r.x'`` -> ``userid = 'r.x'``."""
     _, quoted = _scan_state(sql)
-    rx = re.compile(r"\b(?:" + "|".join(re.escape(n) for n in names) + r")\.",
-                    re.IGNORECASE)
+    rx = re.compile(r"(?<![\w.])" + re.escape(name) + r"\.", re.IGNORECASE)
     return rx.sub(lambda q: q.group(0) if quoted[q.start()] else "", sql)
 
 
@@ -362,12 +365,15 @@ def _pushdown(rest: str, items: list[_FromItem], ev: _FromItem,
     if where is None:
         return None, "none (no WHERE)"
     _, quoted = _scan_state(where)
-    if any(not quoted[w.start()]
-           for w in re.finditer(r"\bSELECT\b", where, re.IGNORECASE)):
-        return None, "none (subquery)"
+    for w in re.finditer(r"\bSELECT\b|--|/\*", where, re.IGNORECASE):
+        if not quoted[w.start()]:
+            return None, ("none (subquery)" if w.group(0).isalpha()
+                          else "none (comment)")
     if _null_supplied(items, ev):
         return None, "none (outer join)"
-    bare = _unqualify(where, {a for a in (ev.alias, ev.table) if a})
+    # only the alias: once a table is aliased, its name as a qualifier
+    # names another FROM item (``ml r JOIN ml ON ... WHERE ml.userid``)
+    bare = _unqualify(where, ev.alias)
     if _top_level_conjuncts(bare) is None:
         return None, "none (OR)"
     user, _ = _split_where(bare, ucol)
@@ -434,8 +440,7 @@ class RecSQL:
             # the events alias as a qualifier (stripped for the check)
             where = tail["where"]
             if where:
-                bare = _unqualify(where,
-                                  {a for a in (ev.alias, ev.table) if a})
+                bare = _unqualify(where, ev.alias)
                 _, residual = _split_where(bare, ucol)
                 if residual is not None:
                     return None

@@ -106,6 +106,9 @@ def test_explain_strategy_labels(spark, events, tmp_path):
     eng.materialize_predictions("exprec", events)
     out = eng.explain(*args, name="exprec", use_view=True)
     assert out.startswith("Recommend strategy: IndexRecommend")
+    assert "User filter: none\n" in out
+    assert "User filter: userid = 1 (view filter)\n" in eng.explain(
+        *args, name="exprec", use_view=True, user_where=F.expr("userid = 1"))
     with pytest.raises(ValueError, match="IndexRecommend"):
         eng.explain(*args, use_view=True)
     # the formatted Spark physical plan rides along

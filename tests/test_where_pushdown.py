@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 from recdb_postgresql_spark.engine import RecEngine
 from recdb_postgresql_spark.plans import RecSQL
 from recdb_postgresql_spark.plans.inspect import plan_stats
-from recdb_postgresql_spark.plans.sql_rewriter import _parse_from, _pushdown
+from recdb_postgresql_spark.plans.sql_rewriter import (_parse_from, _pushdown,
+                                                        _split_where)
 
 COLS = "userid long, itemid long, ratingval double"
 N_USERS = 14
@@ -69,6 +70,26 @@ STATEMENTS = [
     # a predicate on the score column stays residual
     ("*", "{ev}", "itemid TO userid ON ratingval",
      f"WHERE userid = 5 AND ratingval > 4.5 {ORDER}", "userid = 5"),
+    # an OR glued to a parenthesis is still a top-level OR
+    ("*", "{ev}", "itemid TO userid ON ratingval",
+     f"WHERE userid = 3 AND itemid = 3 OR(itemid = 4) {ORDER}", "none (OR)"),
+    ("*", "{ev}", "itemid TO userid ON ratingval",
+     f"WHERE userid = 3 AND (itemid = 3)OR itemid = 4 {ORDER}", "none (OR)"),
+    # the ANDs inside a CASE are not conjuncts of the WHERE
+    ("*", "{ev}", "itemid TO userid ON ratingval",
+     "WHERE CASE WHEN itemid = 3 AND userid = 3 AND itemid < 9 THEN 0 "
+     f"ELSE 1 END = 1 {ORDER}", "none (no user-only conjunct)"),
+    # the quote in the comment would hide the OR from a naive scanner
+    ("*", "{ev}", "itemid TO userid ON ratingval",
+     f"WHERE userid = 3 -- it's\n OR itemid = 4 -- '\n{ORDER}",
+     "none (comment)"),
+    # self-join: the bare table name qualifies the other FROM item
+    ("r.userid, r.itemid, r.ratingval, pdrat.ratingval AS seen",
+     "{ev} r JOIN pdrat ON r.itemid = pdrat.itemid",
+     "r.itemid TO r.userid ON r.ratingval",
+     "WHERE pdrat.userid = 3 AND r.userid < 6 "
+     "ORDER BY round(r.ratingval, 6) DESC, r.userid, r.itemid, seen",
+     "userid < 6"),
 ]
 
 
@@ -149,6 +170,35 @@ def test_pushdown_split_rules():
                 " WHERE r.userid = 1") is None
     assert push("b, ev r LEFT JOIN a ON r.itemid = a.i",
                 " WHERE r.userid = 1") == "userid = 1"
+    # AND/OR are words, whatever surrounds them
+    assert push("ev r", " WHERE userid = 1 AND(itemid = 2)OR(itemid = 3)") \
+        is None
+    assert push("ev r", " WHERE userid=1AND itemid = 2") is None
+    assert push("ev r", " WHERE userid = 1 AND(itemid = 2)") == "userid = 1"
+    # a CASE is one unit; unbalanced CASE/END pushes nothing
+    assert push("ev r", " WHERE CASE WHEN itemid = 2 AND userid = 1 THEN 1 "
+                "END = 1 AND userid < 4") == "userid < 4"
+    assert push("ev r, t q", " WHERE userid = 1 AND q.end = 2 "
+                "AND userid < 3") == "userid = 1 AND userid < 3"
+    assert push("ev r", " WHERE userid = 1 AND end = 2") is None
+    # backslash-escaped quotes stay inside their literal
+    assert push("ev r", r" WHERE userid = 1 AND c = 'x\' AND userid = 3 "
+                r"AND '") == "userid = 1"
+    assert push("ev r", r" WHERE userid = 'a\'' || itemid || ''") is None
+    # a comment can hide an OR from the scanner (``-- it's`` opens no
+    # quote for Spark), so a WHERE with one is neither pushed nor split;
+    # nor is one with an unclosed quote
+    hidden = "userid = 1 --'\n OR itemid = 4 -- '"
+    items = _parse_from("ev r")
+    assert _pushdown(" WHERE " + hidden, items, items[0], "userid") == \
+        (None, "none (comment)")
+    assert _split_where(hidden, "userid") == (None, hidden)
+    assert _split_where("userid = 'x", "userid") == (None, "userid = 'x")
+    # an aliased table's own name qualifies another FROM item
+    assert push("ml r JOIN ml ON r.itemid = ml.itemid",
+                " WHERE ml.userid = 3") is None
+    assert push("ml JOIN ml2 r ON r.itemid = ml.itemid",
+                " WHERE ml.userid = 3", qual="ml") == "userid = 3"
 
 
 def _pair_aggregate_rows(df) -> int:
@@ -211,7 +261,7 @@ def test_explain_states_the_user_filter(spark, tables):
     args = (spark.table("pdrat"), "userid", "itemid", "ratingval", "usercoscf")
     assert "User filter: userid = 2 (pushed into the build)" in \
         eng.explain(*args, user_where=F.expr("userid = 2"))
-    assert "User filter: none (no WHERE)" in eng.explain(*args)
+    assert "User filter: none\n" in eng.explain(*args)
 
 
 def test_get_spark_disables_origin_capture(spark):
