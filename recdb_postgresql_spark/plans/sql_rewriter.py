@@ -3,28 +3,39 @@
 The reference extends the PostgreSQL grammar
 (``gram.y:2444-2488`` for CREATE/DROP RECOMMENDER,
 ``gram.y:8874-8948`` for the RECOMMEND clause between FROM and WHERE).
-Spark's parser cannot be extended from PySpark, so this module is a
-pre-parser (the analog of ``transformRecommendClause``,
-``parse_rec.c:56-112``): it lifts the RECOMMEND clause out of the
-statement, computes the scored DataFrame through the engine, registers
-it as a temp view under the events table's alias, and hands the
-remaining, now-plain SQL to ``spark.sql``.
+Spark's parser cannot be extended from PySpark, so this module lifts
+the RECOMMEND clause out of the statement (the analog of
+``transformRecommendClause``, ``parse_rec.c:56-112``) and lets the
+session's parser read the plain statement that is left; everything the
+rewrite needs is read from that parsed plan. The FROM is whatever
+Spark's parser accepts (comma lists, every JOIN kind with ON, USING or
+NATURAL, parenthesized subqueries). The events item is the FROM item
+the RECOMMEND columns qualify, or the leftmost one. Its text span is
+swapped for a temp view of the scored DataFrame under the same alias,
+and the statement runs through ``spark.sql``.
 
-The reference splits the WHERE into user-only vs residual conjuncts at
-parse time (TRUE-substitution, ``parse_rec.c:1109-1211``) so user
+The reference splits the WHERE into user-only vs residual conjuncts on
+its parse tree (TRUE-substitution, ``parse_rec.c:1109-1211``) so user
 predicates prune *before* scoring. Catalyst does not do that split for
 us: a WHERE over the scored view does not reach the on-the-fly model
-build (without the split, a user-CF statement for one user builds the
-whole user x user model). So ``_pushdown`` splits it explicitly, on
-the on-the-fly route only: the user-only conjuncts (events alias
-stripped, ``_split_where``) go to ``RecEngine.recommend`` as
-``user_where`` and prune the build, while the full WHERE still runs
-over the scored view. Nothing is pushed
-when the WHERE has a top-level OR or a subquery, when the events source
-is a subquery, or when the events item is on the null-supplying side
-of an outer join (a null-accepting conjunct such as ``userid IS NULL``
-would then turn matched rows into null-extended ones). A conjunct that
-names any qualifier but the events alias is residual.
+build. So on the on-the-fly route the user-only conjuncts go to
+``RecEngine.recommend`` as ``user_where``, and the full WHERE still
+runs over the scored view. On the parsed plan:
+
+- the conjuncts are the ``And`` operands of the WHERE ``Filter``;
+- a conjunct is user-only when every column it names is ``<ucol>`` or
+  ``<alias>.<ucol>``, it calls no function but ``between`` and it
+  holds no subquery; its source text, the alias cut from its columns,
+  is what is pushed;
+- nothing is pushed when the events source is a subquery, or when the
+  events item is null-supplied: right of a LEFT, left of a RIGHT or
+  either side of a FULL join, USING and NATURAL ones included (a
+  null-accepting conjunct such as ``userid IS NULL`` would then turn
+  matched rows into null-extended ones).
+
+The parser is ``sessionState().sqlParser()`` over py4j, so the front
+door needs classic PySpark, as ``RecEngine.explain`` does; its errors
+surface as ``pyspark.errors.ParseException``, as from ``spark.sql``.
 
 Supported statements (the whole reference regression suite,
 ``PostgreSQL/recdb_regression_test.sql``)::
@@ -33,18 +44,15 @@ Supported statements (the whole reference regression suite,
         USERS FROM <ucol> ITEMS FROM <icol> EVENTS FROM <ecol>
         USING <method>
     DROP RECOMMENDER <name>
-    SELECT <cols> FROM <item> [alias][, <item2> [alias2]...]
-                              [JOIN <item2> [alias2] ON <cond> ...]
+    SELECT <cols> FROM <from items>
         RECOMMEND [a.]<icol> TO [a.]<ucol> ON [a.]<ecol> USING <method>
         [WHERE ...] [ORDER BY ...] [LIMIT k]
 
-where each FROM <item> is a table name or a parenthesized subquery
-``(SELECT ...) alias``. A subquery may also BE the events source the
-RECOMMEND columns qualify to: it is trained over on-the-fly (the
-reference disables all recommend-time subquery optimizations —
-``allpaths.c:1533-1535``, ``subselect.c:1460`` — so there is no
-materialized substitution to resolve; OP_GENERATE over the derived
-table is the analog).
+A subquery ``(SELECT ...) alias`` may BE the events source: it is
+trained over on-the-fly (the reference disables all recommend-time
+subquery optimizations — ``allpaths.c:1533-1535``,
+``subselect.c:1460`` — so there is no materialized substitution to
+resolve; OP_GENERATE over the derived table is the analog).
 
 Like the reference (validateClauses, ``parse_rec.c:119-157``),
 DISTINCT / INTO / GROUP BY / HAVING / WINDOW / FOR / WITH are rejected
@@ -57,6 +65,7 @@ import logging
 import re
 from typing import Optional
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -72,314 +81,222 @@ _CREATE_RE = re.compile(
 _DROP_RE = re.compile(r"^\s*DROP\s+RECOMMENDER\s+(?P<name>\w+)\s*;?\s*$",
                       re.IGNORECASE)
 _REC_RE = re.compile(
-    r"^\s*SELECT\s+(?P<select>.+?)\s+FROM\s+(?P<from>.+?)\s+"
-    r"RECOMMEND\s+(?P<icol>[\w.]+)\s+TO\s+(?P<ucol>[\w.]+)\s+"
-    r"ON\s+(?P<ecol>[\w.]+)\s+USING\s+(?P<method>\w+)"
+    r"^\s*SELECT\s+(?P<select>.+?)\s+FROM\s+.+?"
+    r"(?P<rec>\s+RECOMMEND\s+(?P<icol>[\w.]+)\s+TO\s+(?P<ucol>[\w.]+)\s+"
+    r"ON\s+(?P<ecol>[\w.]+)\s+USING\s+(?P<method>\w+))"
     r"(?P<rest>\s+.*?)?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL)
 
-
-# the words that cut, join or nest conjuncts; a word preceded by a
-# letter, digit, "_" or "." is part of an identifier (Spark lexes
-# ``1OR`` as one identifier, and ``t.end`` is a column)
-_CONJ_WORD_RE = re.compile(r"(?<![\w.])(AND|OR|BETWEEN|CASE|END)\b",
-                           re.IGNORECASE)
+# the expression nodes that hold a subquery, and window functions
+_SUBQUERIES = ("ScalarSubquery", "Exists", "ListQuery", "InSubquery")
+_WINDOWS = ("WindowExpression", "UnresolvedWindowExpression")
 
 
-def _top_level_conjuncts(where: str) -> Optional[list[str]]:
-    """Split on the AND words at parenthesis depth 0 outside quoted
-    spans and CASE ... END. Returns None when a top-level OR is
-    present: ``a = 1 OR b = 2 AND c = 3`` parses as ``a OR (b AND
-    c)``, so splitting its ANDs would change semantics — the caller
-    must then treat the whole clause as residual. A comment, an
-    unclosed quote and unbalanced parentheses or CASE/END also return
-    None.
-
-    AND/OR are words, not whitespace-delimited: ``a = 1 AND b = 2
-    OR(c = 3)`` has a top-level OR. Quoted spans are opaque
-    (``_scan_state``): ``name = 'rock AND roll'`` is ONE conjunct. A
-    CASE expression is one unit: the ANDs of ``CASE WHEN a AND b THEN
-    ... END`` are not cuts. The AND of a top-level ``BETWEEN x AND y``
-    belongs to it, not a cut."""
-    depth, quoted = _scan_state(where)
-    if quoted[len(where)] or any(not quoted[c.start()]
-                                 for c in re.finditer(r"--|/\*", where)):
-        return None
-    cuts, case, between = [], 0, False
-    for m in _CONJ_WORD_RE.finditer(where):
-        if quoted[m.start()]:
-            continue
-        word = m.group(1).upper()
-        if word in ("CASE", "END"):
-            case += 1 if word == "CASE" else -1
-            if case < 0:
-                return None
-            continue
-        if depth[m.start()] != 0 or case:
-            continue
-        if word == "OR":
-            return None
-        if word == "BETWEEN":
-            between = True
-        elif between:
-            between = False
-        else:
-            cuts.append((m.start(), m.end()))
-    if case or depth[len(where)] != 0:
-        return None
-    parts, start = [], 0
-    for a, b in cuts:
-        parts.append(where[start:a].strip())
-        start = b
-    parts.append(where[start:].strip())
-    return [p for p in parts if p]
+def _seq(seq) -> list:
+    """A Scala Seq (a node's ``children()``, ``nameParts()``) as a list."""
+    return [seq.apply(k) for k in range(seq.size())]
 
 
-def _split_where(where: Optional[str], ucol: str) -> tuple[Optional[str], Optional[str]]:
-    """Split top-level AND conjuncts into user-only vs residual — the
-    TRUE-substitution rewrite of ``parse_rec.c:1109-1211``. A conjunct
-    is user-only when its only identifier is ``ucol`` (any case, as
-    Spark resolves it); function names and words like CASE count as
-    identifiers, so ``coalesce(userid, 0) = 0`` is residual. A clause
-    that is not a conjunction (``_top_level_conjuncts``) comes back
-    whole as the residual."""
-    if not where:
-        return None, None
-    conjuncts = _top_level_conjuncts(where)
-    if conjuncts is None:
-        return None, where
-    keywords = {"and", "or", "not", "in", "like", "ilike", "between",
-                "is", "null", "true", "false"}
-    user_parts, rest_parts = [], []
-    for c in conjuncts:
-        # words inside string literals are values, not identifiers:
-        # ``u = 'the thing'`` must still classify as a user predicate
-        # (double-quoted spans stay: they may be identifiers)
-        _, quoted = _scan_state(c)
-        unquoted = "".join(" " if quoted[k] == "'" else ch
-                           for k, ch in enumerate(c))
-        idents = {x.lower() for x in re.findall(r"[A-Za-z_]\w*", unquoted)
-                  if x.lower() not in keywords}
-        (user_parts if idents <= {ucol.lower()} else rest_parts).append(c)
-    return (" AND ".join(user_parts) or None, " AND ".join(rest_parts) or None)
+def _own_span(node) -> tuple[int, int]:
+    """[start, stop] (stop inclusive) of the text ``node`` was parsed
+    from."""
+    o = node.origin()
+    return o.startIndex().get(), o.stopIndex().get()
 
 
-_JOIN_KW_RE = re.compile(
-    r"\b(?:NATURAL\s+)?(?:INNER\s+|LEFT\s+(?:OUTER\s+)?|RIGHT\s+(?:OUTER\s+)?"
-    r"|FULL\s+(?:OUTER\s+)?|CROSS\s+)?JOIN\b",
-    re.IGNORECASE)
+def _span(node) -> tuple[int, int]:
+    """The span of a query and its whole subtree (its ORDER BY ...
+    LIMIT is a parent of its SELECT)."""
+    lo, hi = _own_span(node)
+    for c in _seq(node.children()):
+        a, b = _span(c)
+        lo, hi = min(lo, a), max(hi, b)
+    return lo, hi
 
 
-class _FromItem:
-    """One FROM item: a table or a parenthesized subquery, with its
-    alias, the [start, end) span of the item core (table/subquery +
-    alias, EXCLUDING any trailing ON condition) in the FROM text, and
-    how it joins the items before it."""
-
-    __slots__ = ("table", "alias", "subquery", "start", "end", "join")
-
-    def __init__(self, table, alias, subquery, start, end, join):
-        self.table = table          # None for subqueries
-        self.alias = alias
-        self.subquery = subquery    # inner SELECT text, None for tables
-        self.start = start
-        self.end = end
-        # None (first item), "," or the JOIN kind: INNER, LEFT, RIGHT,
-        # FULL or CROSS
-        self.join = join
+def _holds(node, kinds: tuple) -> bool:
+    """Whether an expression tree has a node of one of ``kinds``."""
+    return node.nodeName() in kinds or any(
+        _holds(c, kinds) for c in _seq(node.children()))
 
 
-def _join_kind(sep: str) -> str:
-    """The kind of a FROM separator: "," or that of a JOIN keyword run
-    (``NATURAL LEFT OUTER JOIN`` -> LEFT)."""
-    if sep == ",":
-        return ","
-    words = sep.upper().split()
-    return next((w for w in words if w in ("LEFT", "RIGHT", "FULL", "CROSS")),
-                "INNER")
+def _from_items(node, nulled: bool = False):
+    """(item, alias, null-supplied) for each FROM leaf under ``node``,
+    left to right. A side of a join is null-supplied when the join
+    null-extends it, or when the join itself sits on a null-supplied
+    side."""
+    kind = node.nodeName()
+    if kind == "SubqueryAlias":
+        yield node, node.alias(), nulled
+        return
+    if kind == "UnresolvedRelation":
+        yield node, node.multipartIdentifier().last(), nulled
+        return
+    sides = (False, False)
+    if kind == "Join":
+        # "LEFT OUTER", "USING FULL OUTER", "NATURAL RIGHT OUTER", ...
+        words = set(node.joinType().sql().split())
+        full = "FULL" in words
+        sides = (full or "RIGHT" in words, full or {"LEFT", "OUTER"} <= words)
+    for k, child in enumerate(_seq(node.children())):
+        yield from _from_items(child, nulled or k < 2 and sides[k])
 
 
-def _scan_state(s: str):
-    """depth[i] = paren depth BEFORE s[i]; quoted[i] = the quote
-    character of the quoted span s[i] is in, "" outside one
-    (quoted[len(s)]: the quote left open at the end). Spans are
-    lexed as Spark does: single- and double-quoted with backslash and
-    doubled-quote escapes (``'it\\'s'``, ``'it''s'``), backquoted
-    identifiers with the doubled-backquote escape."""
-    n = len(s)
-    depth = [0] * (n + 1)
-    quoted = [""] * (n + 1)
-    d, q, i = 0, "", 0
-    while i < n:
-        depth[i] = d
-        c = s[i]
-        if q:
-            quoted[i] = q
-            if (c == "\\" and q != "`" or c == q and s[i + 1:i + 2] == q) \
-                    and i + 1 < n:
-                # the escaped character stays in the span
-                depth[i + 1], quoted[i + 1] = d, q
-                i += 2
-                continue
-            if c == q:
-                q = ""
-        elif c in ("'", '"', "`"):
-            quoted[i] = q = c
-        elif c == "(":
-            d += 1
-        elif c == ")":
-            d -= 1
-        i += 1
-    depth[n], quoted[n] = d, q
-    return depth, quoted
+def _conjuncts(cond) -> list:
+    if cond.nodeName() == "And":
+        return [c for k in _seq(cond.children()) for c in _conjuncts(k)]
+    return [cond]
 
 
-def _parse_from(from_sql: str) -> list[_FromItem]:
-    """``t1 a, (SELECT ...) b JOIN t3 AS c ON ...`` -> [_FromItem, ...]
-    (alias defaults to the table name; ON conditions are not part of
-    the item span). Splits on top-level commas/JOIN keywords only —
-    commas and JOINs inside subqueries stay put."""
-    depth, quoted = _scan_state(from_sql)
+class _Statement:
+    """A RECOMMEND statement as Spark's parser reads it once the
+    RECOMMEND clause is lifted out (``plain``): the events item, the
+    WHERE conjuncts and what of them the model build can take."""
 
-    def top_level(m_start: int) -> bool:
-        return depth[m_start] == 0 and not quoted[m_start]
-
-    seps = [(m.start(), m.end()) for m in _JOIN_KW_RE.finditer(from_sql)
-            if top_level(m.start())]
-    seps += [(i, i + 1) for i, c in enumerate(from_sql)
-             if c == "," and top_level(i)]
-    seps.sort()
-    bounds, last, join = [], 0, None
-    for a, b in seps:
-        bounds.append((last, a, join))
-        last, join = b, _join_kind(from_sql[a:b])
-    bounds.append((last, len(from_sql), join))
-
-    out = []
-    for seg_start, seg_end, join in bounds:
-        seg = from_sql[seg_start:seg_end]
-        # strip the ON condition: first top-level ON keyword in the seg
-        on_at = None
-        for m in re.finditer(r"\bON\b", seg, re.IGNORECASE):
-            p = seg_start + m.start()
-            if depth[p] == 0 and not quoted[p]:
-                on_at = m.start()
-                break
-        core = seg[:on_at] if on_at is not None else seg
-        stripped = core.strip()
-        if not stripped:
-            continue
-        lead = seg_start + len(core) - len(core.lstrip())
-        span_end = lead + len(stripped)
-        if stripped.startswith("("):
-            # subquery item: find the matching close paren
-            d = 0
-            close = None
-            sub_abs = lead
-            for j in range(sub_abs, span_end):
-                if quoted[j]:
+    def __init__(self, parser, m: re.Match):
+        self.parser = parser
+        self.method = m["method"].lower()
+        qual, self.ucol = m["ucol"].rpartition(".")[::2]
+        qual = qual.lower()
+        self.icol = m["icol"].rpartition(".")[2]
+        self.ecol = m["ecol"].rpartition(".")[2]
+        at = m.start("rec")
+        self.plain = m.string[:at] + (m["rest"] or "")
+        self.plan = parser.parsePlan(self.plain)
+        # the query block whose FROM the RECOMMEND clause ended: the
+        # innermost SELECT whose span holds that place (a set-op leg or
+        # a FROM subquery when the clause sits in one)
+        self.block, todo = None, [self.plan]
+        while todo:
+            node = todo.pop()
+            if node.nodeName() == "Project":
+                lo, hi = _own_span(node)
+                if not lo < at <= hi + 1:
                     continue
-                if from_sql[j] == "(":
-                    d += 1
-                elif from_sql[j] == ")":
-                    d -= 1
-                    if d == 0:
-                        close = j
-                        break
-            if close is None:
-                raise ValueError(f"unbalanced parentheses in FROM item {stripped!r}")
-            inner = from_sql[sub_abs + 1:close]
-            tail = from_sql[close + 1:span_end].split()
-            alias = None
-            if tail:
-                alias = tail[-1] if tail[-1].upper() != "AS" else None
-            if not alias:
-                raise ValueError(
-                    f"subquery FROM item needs an alias: {stripped!r}")
-            out.append(_FromItem(None, alias, inner.strip(), lead, span_end,
-                                 join))
+                self.block = node
+            todo += _seq(node.children())
+        if self.block is None:
+            raise ValueError("RECOMMEND must follow the FROM of a SELECT")
+        below = self.block.child()
+        self.where = below.condition() if below.nodeName() == "Filter" else None
+        self.from_ = below.child() if self.where is not None else below
+
+        found = next((it for it in _from_items(self.from_)
+                      if not qual or it[1].lower() == qual), None)
+        if found is None:
+            names = [a for _, a, _ in _from_items(self.from_)]
+            raise ValueError(f"RECOMMEND qualifier {qual!r} not in FROM "
+                             f"{names}")
+        self.item, self.alias, self.null_supplied = found
+        self.span = _own_span(self.item)
+        rel = (self.item.child() if self.item.nodeName() == "SubqueryAlias"
+               else self.item)
+        self.table, self.subquery = None, None
+        if rel.nodeName() == "UnresolvedRelation":
+            self.table = rel.tableName()
+        elif self.alias.startswith("__auto_generated_subquery_name"):
+            raise ValueError("subquery FROM item needs an alias: "
+                             + self.plain[self.span[0]:self.span[1] + 1])
         else:
-            toks = stripped.split()
-            table = toks[0]
-            alias = (toks[-1] if len(toks) > 1 and toks[-1].upper() != "AS"
-                     else table)
-            out.append(_FromItem(table, alias, None, lead, span_end, join))
-    return out
+            lo, hi = _span(rel)
+            self.subquery = self.plain[lo:hi + 1]
+        self.conjuncts = _conjuncts(self.where) if self.where is not None else []
 
+    def _names(self, parts: list[str], col: str) -> bool:
+        """Whether name parts name ``col`` of the events item."""
+        low = [p.lower() for p in parts]
+        return low in ([col.lower()], [self.alias.lower(), col.lower()])
 
-def _null_supplied(items: list[_FromItem], ev: _FromItem) -> bool:
-    """Whether ``ev`` is on the null-supplying side of an outer join.
-    JOIN binds tighter than ",", and a chain of JOINs is left-deep, so
-    within its comma group ``ev`` is null-supplied by its own LEFT/FULL
-    JOIN or by any later RIGHT/FULL JOIN."""
-    i = items.index(ev)
-    later = []
-    for it in items[i + 1:]:
-        if it.join == ",":
-            break
-        later.append(it.join)
-    return ev.join in ("LEFT", "FULL") or any(j in ("RIGHT", "FULL")
-                                              for j in later)
+    def _user_only(self, node, cuts: list) -> bool:
+        """Whether ``node`` names no column but the user column, calls
+        no function but ``between`` and holds no subquery; appends
+        (span, name) for each column to cut the events alias from."""
+        kind = node.nodeName()
+        if kind == "Literal":
+            return True
+        if kind == "UnresolvedAttribute":
+            parts = _seq(node.nameParts())
+            if not self._names(parts, self.ucol):
+                return False
+            if len(parts) == 2:
+                cuts.append((_own_span(node), parts[1]))
+            return True
+        if kind in _SUBQUERIES or kind == "UnresolvedFunction" and \
+                _seq(node.nameParts()) != ["between"]:
+            return False
+        return all(self._user_only(c, cuts) for c in _seq(node.children()))
 
+    def _pushed(self, conj) -> Optional[str]:
+        """The text of a user-only conjunct, events alias cut, or None."""
+        cuts: list = []
+        if not self._user_only(conj, cuts):
+            return None
+        # the text ends where the conjunct does and starts at the least
+        # start down its first operands: a predicate's own span starts
+        # at its keyword (``IN (1, 2)``)
+        (lo, hi), kids = _own_span(conj), conj.children()
+        while kids.size():
+            node = kids.apply(0)
+            lo, kids = min(lo, _own_span(node)[0]), node.children()
+        # the "(" of a parenthesized predicate operand is in no node's
+        # span (``(userid) IN (1)`` spans ``userid) IN (1)``): push only
+        # text that reads back as the conjunct
+        try:
+            if not self.parser.parseExpression(
+                    self.plain[lo:hi + 1]).equals(conj):
+                return None
+        except ParseException:
+            return None
+        text, at = "", lo
+        for (a, b), col in sorted(cuts):
+            text, at = text + self.plain[at:a] + col, b + 1
+        text += self.plain[at:hi + 1]
+        # an OR operand of AND was parenthesized in the WHERE
+        return f"({text})" if conj.nodeName() == "Or" else text
 
-# clauses that may follow a WHERE in a RECOMMEND statement's tail
-_WHERE_END_RE = re.compile(
-    r"\b(?:ORDER\s+BY|SORT\s+BY|CLUSTER\s+BY|DISTRIBUTE\s+BY|LIMIT|OFFSET"
-    r"|UNION|INTERSECT|EXCEPT|MINUS)\b", re.IGNORECASE)
-
-
-def _where_text(rest: str) -> Optional[str]:
-    """The WHERE condition of a statement tail (``WHERE ... ORDER BY
-    ... LIMIT n``), or None. The condition ends at the first top-level
-    clause keyword outside a quoted span."""
-    m = re.match(r"\s*WHERE\b", rest, re.IGNORECASE)
-    if m is None:
-        return None
-    body = rest[m.end():]
-    depth, quoted = _scan_state(body)
-    for e in _WHERE_END_RE.finditer(body):
-        if depth[e.start()] == 0 and not quoted[e.start()]:
-            body = body[:e.start()]
-            break
-    return body.strip() or None
-
-
-def _unqualify(sql: str, name: str) -> str:
-    """Drop the ``<name>.`` qualifiers outside quoted spans:
-    ``r.userid = 'r.x'`` -> ``userid = 'r.x'``."""
-    _, quoted = _scan_state(sql)
-    rx = re.compile(r"(?<![\w.])" + re.escape(name) + r"\.", re.IGNORECASE)
-    return rx.sub(lambda q: q.group(0) if quoted[q.start()] else "", sql)
-
-
-def _pushdown(rest: str, items: list[_FromItem], ev: _FromItem,
-              ucol: str) -> tuple[Optional[str], str]:
-    """(user-only conjuncts to push into an on-the-fly build, or
-    None; what was pushed or why nothing was). Pushing a conjunct
-    that the full WHERE applies again only drops scored rows the
-    WHERE would drop — unless ``ev`` is null-supplied by an outer
-    join, where pruning it changes which rows get null-extended."""
-    if ev.subquery is not None:
-        return None, "none (subquery events source)"
-    where = _where_text(rest)
-    if where is None:
-        return None, "none (no WHERE)"
-    _, quoted = _scan_state(where)
-    for w in re.finditer(r"\bSELECT\b|--|/\*", where, re.IGNORECASE):
-        if not quoted[w.start()]:
-            return None, ("none (subquery)" if w.group(0).isalpha()
-                          else "none (comment)")
-    if _null_supplied(items, ev):
-        return None, "none (outer join)"
-    # only the alias: once a table is aliased, its name as a qualifier
-    # names another FROM item (``ml r JOIN ml ON ... WHERE ml.userid``)
-    bare = _unqualify(where, ev.alias)
-    if _top_level_conjuncts(bare) is None:
-        return None, "none (OR)"
-    user, _ = _split_where(bare, ucol)
-    if user is None:
+    def pushdown(self) -> tuple[Optional[str], str]:
+        """(user-only conjuncts to push into an on-the-fly build, or
+        None; what was pushed or why nothing was). Pushing a conjunct
+        that the full WHERE applies again only drops scored rows the
+        WHERE would drop — unless the events item is null-supplied by
+        an outer join, where pruning it changes which rows get
+        null-extended."""
+        if self.subquery is not None:
+            return None, "none (subquery events source)"
+        if self.where is None:
+            return None, "none (no WHERE)"
+        if self.null_supplied:
+            return None, "none (outer join)"
+        pushed = [t for t in map(self._pushed, self.conjuncts) if t]
+        if pushed:
+            return " AND ".join(pushed), " AND ".join(pushed)
+        if self.where.nodeName() == "Or":
+            return None, "none (OR)"
         return None, "none (no user-only conjunct)"
-    return user, user
+
+    def top_n_by_score(self, cap: int) -> bool:
+        """Whether the statement is ``SELECT ... FROM <events item>
+        [WHERE <user-only conjuncts>] ORDER BY <score> DESC LIMIT n``
+        with ``n <= cap`` and no window function in the select list (a
+        window over the capped view sees only the stored rows)."""
+        lim = self.plan
+        if lim.nodeName() != "GlobalLimit" or \
+                lim.limitExpr().nodeName() != "Literal" or \
+                not 0 <= lim.limitExpr().value() <= cap:
+            return False
+        sort = lim.child().child()
+        if sort.nodeName() != "Sort" or not getattr(sort, "global")() \
+                or not sort.child().equals(self.block):
+            return False
+        order = _seq(sort.order())
+        key = order[0].child()
+        return (len(order) == 1 and order[0].direction().sql() == "DESC"
+                and key.nodeName() == "UnresolvedAttribute"
+                and self._names(_seq(key.nameParts()), self.ecol)
+                and self.from_.equals(self.item)
+                and all(self._user_only(c, []) for c in self.conjuncts)
+                and not any(_holds(e, _WINDOWS)
+                            for e in _seq(self.block.projectList())))
 
 
 class RecSQL:
@@ -394,25 +311,26 @@ class RecSQL:
     def __init__(self, engine: RecEngine):
         self.engine = engine
         self.spark: SparkSession = engine.spark
+        self._parser = self.spark._jsparkSession.sessionState().sqlParser()
         # R19 strategy label of the last RECOMMEND statement this
         # front door executed (GenerateRecommend / FilterRecommend /
         # IndexRecommend) — observable for tests and verbose logging
         self.last_strategy: Optional[str] = None
         # the user-only conjuncts that statement pushed into the model
-        # build, or "none (<why>)"
+        # build, or "none (<why>)": materialized route, subquery events
+        # source, no WHERE, outer join, OR, no user-only conjunct
         self.last_pushdown: Optional[str] = None
 
-    def _try_view_route(self, m: re.Match, hit, ev, ucol: str, icol: str,
-                        ecol: str) -> Optional[DataFrame]:
+    def _try_view_route(self, st: _Statement, hit) -> Optional[DataFrame]:
         """Return the stored RecView as the scored frame when the
         statement is PROVABLY exact over the per-user-capped view,
         else None (caller falls back to live/materialized scoring).
 
         Exactness: the view holds the top ``view_cap`` predictions per
-        user. A statement whose residual WHERE references only the
-        user column (so no item/score predicate can dig past the cap)
-        and that ends ``ORDER BY <score> DESC LIMIT n`` with
-        ``n <= view_cap`` is exact, because each row of a global
+        user. A statement over the events item alone, whose WHERE is
+        user-only (so no item/score predicate or join can dig past the
+        cap) and that ends ``ORDER BY <score> DESC LIMIT n`` with
+        ``n <= view_cap``, is exact, because each row of a global
         top-n is within its own user's top-n. ``view_cap == 0``
         (full grid) is exact for any statement."""
         if "recview" not in getattr(hit, "model_tables", []):
@@ -421,29 +339,11 @@ class RecSQL:
         if cap < 0:
             return None  # pre-cap manifest: cap unknown, never route
         # the RECOMMEND columns must be the ones the view stores
-        if (hit.userkey, hit.itemkey, hit.eventval) != (ucol, icol, ecol):
+        if (hit.userkey, hit.itemkey, hit.eventval) != (st.ucol, st.icol,
+                                                         st.ecol):
             return None
-        if cap > 0:
-            rest = m["rest"] or ""
-            tail = re.match(
-                r"^\s*(?:WHERE\s+(?P<where>.*?))?\s*"
-                r"ORDER\s+BY\s+(?P<obcol>[\w.]+)\s+DESC\s+"
-                r"LIMIT\s+(?P<lim>\d+)\s*$",
-                rest, re.IGNORECASE | re.DOTALL)
-            if tail is None:
-                return None
-            if tail["obcol"].split(".")[-1].lower() != ecol.lower():
-                return None
-            if int(tail["lim"]) > cap:
-                return None
-            # residual WHERE must be user-only; identifiers may carry
-            # the events alias as a qualifier (stripped for the check)
-            where = tail["where"]
-            if where:
-                bare = _unqualify(where, ev.alias)
-                _, residual = _split_where(bare, ucol)
-                if residual is not None:
-                    return None
+        if cap > 0 and not st.top_n_by_score(cap):
+            return None
         return self.engine.recommend_from_view(hit.name, allow_capped=True)
 
     @staticmethod
@@ -500,45 +400,27 @@ class RecSQL:
             raise ValueError(
                 "only one RECOMMEND clause per statement is supported; "
                 "run each set-op leaf separately and union the results")
-        items = _parse_from(m["from"])
         # the events source is the one the RECOMMEND columns qualify
         # (events-table resolution, parse_rec.c:187-297)
-        def split_qual(col: str) -> tuple[Optional[str], str]:
-            return tuple(col.split(".", 1)) if "." in col else (None, col)  # type: ignore
-
-        qual, ucol = split_qual(m["ucol"])
-        _, icol = split_qual(m["icol"])
-        _, ecol = split_qual(m["ecol"])
-        if qual is None:
-            ev = items[0]
-        else:
-            hits = [it for it in items if it.alias == qual or it.table == qual]
-            if not hits:
-                raise ValueError(
-                    f"RECOMMEND qualifier {qual!r} not in FROM "
-                    f"{[(it.table or '(subquery)', it.alias) for it in items]}")
-            ev = hits[0]
-
-        if ev.subquery is not None:
+        st = _Statement(self._parser, m)
+        if st.subquery is not None:
             # parenthesized FROM item as the events source: train over
             # the derived table, always on-the-fly. The reference keeps
             # subqueries OUT of its recommend optimizations (pushdown/
             # pull-up disabled, allpaths.c:1533-1535, subselect.c:1460),
             # so there is no materialized substitution to look up —
             # OP_GENERATE over the subquery output is the exact analog.
-            events_df = self.spark.sql(ev.subquery)
+            events_df = self.spark.sql(st.subquery)
             hit = None
         else:
-            events_df = self.spark.table(ev.table)
+            events_df = self.spark.table(st.table)
             # materialized-model substitution (parse_rec.c:554-678): a
             # catalog hit on (eventtable, method) flips OP_GENERATE ->
             # OP_FILTER
-            hit = self.engine.catalog.find(m["method"].lower(),
-                                           ev.table.lower())
+            hit = self.engine.catalog.find(st.method, st.table.lower())
         scored, user_sql = None, None
         if hit is None:
-            user_sql, self.last_pushdown = _pushdown(
-                m["rest"] or "", items, ev, ucol)
+            user_sql, self.last_pushdown = st.pushdown()
         else:
             self.last_pushdown = "none (materialized route)"
             # IndexRecommend auto-route (R19 / execRecommend.c:151-294,
@@ -547,21 +429,21 @@ class RecSQL:
             # answerable from the capped view, substitute the stored
             # predictions instead of re-scoring. Exactness argument in
             # _try_view_route.
-            scored = self._try_view_route(m, hit, ev, ucol, icol, ecol)
+            scored = self._try_view_route(st, hit)
         if scored is not None:
             self.last_strategy = "IndexRecommend"
         else:
             self.last_strategy = ("FilterRecommend" if hit
                                   else "GenerateRecommend")
             scored = self.engine.recommend(
-                events_df, ucol, icol, ecol,
-                m["method"].lower(), name=hit.name if hit else None,
+                events_df, st.ucol, st.icol, st.ecol, st.method,
+                name=hit.name if hit else None,
                 user_where=F.expr(user_sql) if user_sql else None)
         if self.engine.verbose_queries:
             logger.info("RECOMMEND (SQL) %s strategy=%s method=%s plan=%s "
                         "user_where=%s",
                         hit.name if hit else "<on-the-fly>",
-                        self.last_strategy, m["method"].lower(),
+                        self.last_strategy, st.method,
                         self.engine.last_plan, self.last_pushdown)
 
         RecSQL._view_seq += 1
@@ -569,14 +451,12 @@ class RecSQL:
         scored.createOrReplaceTempView(view)
 
         # swap the events item for the scored view IN PLACE (exact
-        # span, so comma lists, JOIN ... ON syntax and sibling
-        # subqueries survive verbatim); aliasing the view as the
-        # original alias (or table name) keeps every qualified column
-        # reference valid
-        new_from = (m["from"][:ev.start] + f"{view} {ev.alias}"
-                    + m["from"][ev.end:])
-        rest = re.sub(r"\bILIKE\b", "ilike", m["rest"] or "", flags=re.IGNORECASE)
-        plain = f"SELECT {m['select']} FROM {new_from}{rest}"
+        # span, so every other FROM item, join and condition survives
+        # verbatim); aliasing the view as the item's alias keeps every
+        # qualified column reference valid
+        lo, hi = st.span
+        alias = "`" + st.alias.replace("`", "``") + "`"
+        plain = st.plain[:lo] + f"{view} {alias}" + st.plain[hi + 1:]
         try:
             return self.spark.sql(plain)
         finally:

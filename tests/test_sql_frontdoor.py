@@ -6,27 +6,44 @@ from pyspark.sql import functions as F
 
 from recdb_postgresql_spark.engine import RecEngine
 from recdb_postgresql_spark.plans import RecSQL
-from recdb_postgresql_spark.plans.sql_rewriter import _split_where
+from recdb_postgresql_spark.plans.sql_rewriter import _REC_RE, _Statement
+
+
+def _view(spark, tmp_path, name, rows, schema):
+    """A parquet-backed temp view: a list-backed one re-runs Python
+    workers on every scan of a RECOMMEND statement's plan."""
+    spark.createDataFrame(rows, schema).write.parquet(str(tmp_path / name))
+    spark.read.parquet(str(tmp_path / name)).createOrReplaceTempView(name)
 
 
 @pytest.fixture()
-def rs(spark):
+def rs(spark, tmp_path):
     rows = [(u, i, float((u * 3 + i) % 7 + 1))
             for u in range(1, 8) for i in range(1, 6)]
-    spark.createDataFrame(rows, "userid long, itemid long, ratingval double") \
-        .createOrReplaceTempView("sqlrat")
+    _view(spark, tmp_path, "sqlrat", rows,
+          "userid long, itemid long, ratingval double")
     return RecSQL(RecEngine(spark))
 
 
-def test_where_split_true_substitution():
-    u, rest = _split_where("userid IN (1,2) AND itemid < 7 AND ratingval >= 4", "userid")
-    assert u == "userid IN (1,2)"
-    assert rest == "itemid < 7 AND ratingval >= 4"
-    assert _split_where(None, "userid") == (None, None)
-    assert _split_where("itemid = 3", "userid") == (None, "itemid = 3")
+def _split(spark, where):
+    """(what the statement pushes, or why not; its WHERE conjuncts) for
+    ``where`` over ``sqlrat``."""
+    q = ("SELECT * FROM sqlrat RECOMMEND itemid TO userid ON ratingval "
+         "USING ItemCosCF" + (f" WHERE {where}" if where else ""))
+    st = _Statement(spark._jsparkSession.sessionState().sqlParser(),
+                    _REC_RE.match(q))
+    user, why = st.pushdown()
+    return user or why, len(st.conjuncts)
+
+
+def test_where_split_true_substitution(spark):
+    assert _split(spark, "userid IN (1,2) AND itemid < 7 AND ratingval >= 4") \
+        == ("userid IN (1,2)", 3)
+    assert _split(spark, None) == ("none (no WHERE)", 0)
+    assert _split(spark, "itemid = 3") == ("none (no user-only conjunct)", 1)
     # the AND of a BETWEEN belongs to it
-    assert _split_where("itemid BETWEEN 1 AND userid", "userid") == \
-        (None, "itemid BETWEEN 1 AND userid")
+    assert _split(spark, "itemid BETWEEN 1 AND userid") == \
+        ("none (no user-only conjunct)", 1)
 
 
 def test_recommend_grammar_end_to_end(rs):
@@ -55,46 +72,40 @@ def test_passthrough_plain_sql(rs):
     assert rs.sql("SELECT COUNT(*) AS n FROM sqlrat").collect()[0].n == 35
 
 
-def test_split_where_top_level_or_not_split():
+def test_split_where_top_level_or_not_split(spark):
     # 'a = 1 OR b = 2 AND c = 3' parses as a OR (b AND c): must NOT be
     # split into conjuncts applied at different stages
-    u, rest = _split_where("userid = 1 OR itemid = 2 AND ratingval = 3",
-                           "userid")
-    assert u is None
-    assert rest == "userid = 1 OR itemid = 2 AND ratingval = 3"
+    assert _split(spark, "userid = 1 OR itemid = 2 AND ratingval = 3") == \
+        ("none (OR)", 1)
     # parenthesized OR inside one conjunct still splits fine
-    u, rest = _split_where("(userid = 1 OR userid = 2) AND itemid < 7",
-                           "userid")
-    assert u == "(userid = 1 OR userid = 2)"
-    assert rest == "itemid < 7"
+    assert _split(spark, "(userid = 1 OR userid = 2) AND itemid < 7") == \
+        ("(userid = 1 OR userid = 2)", 2)
+    # a top-level OR of user predicates is itself user-only
+    assert _split(spark, "userid = 1 OR userid = 2") == \
+        ("(userid = 1 OR userid = 2)", 1)
 
 
-def test_split_where_quoted_literals():
+def test_split_where_quoted_literals(spark):
     """ADVICE r2: AND/OR inside string literals are data, not
-    operators — the scanner must skip quoted spans."""
+    operators — the parser reads them as one literal."""
     # AND inside a literal: ONE conjunct, classified by its column
-    u, rest = _split_where("name = 'rock AND roll' AND userid = 1", "userid")
-    assert u == "userid = 1"
-    assert rest == "name = 'rock AND roll'"
+    assert _split(spark, "name = 'rock AND roll' AND userid = 1") == \
+        ("userid = 1", 2)
     # OR inside a literal must NOT force the whole clause residual
-    u, rest = _split_where("genre = 'rock OR bust' AND userid < 5", "userid")
-    assert u == "userid < 5"
-    assert rest == "genre = 'rock OR bust'"
-    # '' escape keeps the literal open across the doubled quote
-    u, rest = _split_where("note = 'it''s AND more' AND userid = 2", "userid")
-    assert u == "userid = 2"
-    assert rest == "note = 'it''s AND more'"
+    assert _split(spark, "genre = 'rock OR bust' AND userid < 5") == \
+        ("userid < 5", 2)
+    # '' inside a literal stays in it
+    assert _split(spark, "note = 'it''s AND more' AND userid = 2") == \
+        ("userid = 2", 2)
     # literal value on the user column still pushes down as user-only
-    u, rest = _split_where("userid = 'u AND v' AND itemid = 1", "userid")
-    assert u == "userid = 'u AND v'"
-    assert rest == "itemid = 1"
+    assert _split(spark, "userid = 'u AND v' AND itemid = 1") == \
+        ("userid = 'u AND v'", 2)
 
 
-def test_recommend_join_on_syntax(rs, spark):
-    spark.createDataFrame([(1, "red thing"), (2, "blue thing"),
-                           (3, "red other")],
-                          "pid long, pname string") \
-        .createOrReplaceTempView("sqldim")
+def test_recommend_join_on_syntax(rs, spark, tmp_path):
+    _view(spark, tmp_path, "sqldim",
+          [(1, "red thing"), (2, "blue thing"), (3, "red other")],
+          "pid long, pname string")
     out = rs.sql(
         "SELECT r.userid, r.itemid, r.ratingval, d.pname "
         "FROM sqlrat r JOIN sqldim d ON r.itemid = d.pid "
@@ -141,12 +152,11 @@ def test_recommend_over_subquery_from_item(rs):
         [(r.userid, r.itemid) for r in direct]
 
 
-def test_recommend_subquery_sibling_join(rs, spark):
+def test_recommend_subquery_sibling_join(rs, spark, tmp_path):
     """A subquery as a NON-events FROM item passes through verbatim
     next to the scored view."""
-    spark.createDataFrame([(i, f"name{i}") for i in range(1, 6)],
-                          "pid long, pname string") \
-        .createOrReplaceTempView("sqldim2")
+    _view(spark, tmp_path, "sqldim2", [(i, f"name{i}") for i in range(1, 6)],
+          "pid long, pname string")
     rows = rs.sql(
         "SELECT r.userid, r.itemid, d.pname "
         "FROM sqlrat r JOIN (SELECT pid, pname FROM sqldim2 "

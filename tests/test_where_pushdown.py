@@ -12,13 +12,13 @@ and the one-read item model save.
 """
 
 import pytest
+from pyspark.errors import ParseException
 from pyspark.sql import functions as F
 
 from recdb_postgresql_spark.engine import RecEngine
 from recdb_postgresql_spark.plans import RecSQL
 from recdb_postgresql_spark.plans.inspect import plan_stats
-from recdb_postgresql_spark.plans.sql_rewriter import (_parse_from, _pushdown,
-                                                        _split_where)
+from recdb_postgresql_spark.plans.sql_rewriter import _REC_RE, _Statement
 
 COLS = "userid long, itemid long, ratingval double"
 N_USERS = 14
@@ -79,10 +79,10 @@ STATEMENTS = [
     ("*", "{ev}", "itemid TO userid ON ratingval",
      "WHERE CASE WHEN itemid = 3 AND userid = 3 AND itemid < 9 THEN 0 "
      f"ELSE 1 END = 1 {ORDER}", "none (no user-only conjunct)"),
-    # the quote in the comment would hide the OR from a naive scanner
+    # the quote in the comment would hide the OR from a text scanner
     ("*", "{ev}", "itemid TO userid ON ratingval",
      f"WHERE userid = 3 -- it's\n OR itemid = 4 -- '\n{ORDER}",
-     "none (comment)"),
+     "none (OR)"),
     # self-join: the bare table name qualifies the other FROM item
     ("r.userid, r.itemid, r.ratingval, pdrat.ratingval AS seen",
      "{ev} r JOIN pdrat ON r.itemid = pdrat.itemid",
@@ -90,6 +90,36 @@ STATEMENTS = [
      "WHERE pdrat.userid = 3 AND r.userid < 6 "
      "ORDER BY round(r.ratingval, 6) DESC, r.userid, r.itemid, seen",
      "userid < 6"),
+    # Spark reads `a, b RIGHT JOIN c` as `(a, b) RIGHT JOIN c`: the
+    # events item is null-supplied
+    ("t.itemid, t.tag, r.userid",
+     "{ev} r, pddim d RIGHT JOIN pdtag t ON d.pid = t.itemid",
+     "r.itemid TO r.userid ON r.ratingval",
+     "WHERE r.userid IS NULL ORDER BY t.itemid", "none (outer join)"),
+    ("r.userid, r.itemid, r.ratingval",
+     "{ev} r LEFT SEMI JOIN pddim d ON r.itemid = d.pid "
+     "AND d.pname LIKE '%red%'",
+     "r.itemid TO r.userid ON r.ratingval",
+     "WHERE r.userid = 5 ORDER BY round(r.ratingval, 6) DESC, r.itemid",
+     "userid = 5"),
+    ("r.userid, r.itemid, r.ratingval",
+     "{ev} r LEFT ANTI JOIN pddim d ON r.itemid = d.pid "
+     "AND d.pname LIKE '%red%'",
+     "r.itemid TO r.userid ON r.ratingval",
+     "WHERE r.userid = 8 ORDER BY round(r.ratingval, 6) DESC, r.itemid",
+     "userid = 8"),
+    ("itemid, r.userid, r.ratingval, t.tag", "pdtag t JOIN {ev} r USING (itemid)",
+     "r.itemid TO r.userid ON r.ratingval",
+     "WHERE r.userid = 2 ORDER BY itemid", "userid = 2"),
+    # a scalar subquery in the select list
+    ("(SELECT max(pid) FROM pddim) AS m, userid, itemid", "{ev}",
+     "itemid TO userid ON ratingval",
+     f"WHERE userid = 4 {ORDER} LIMIT 6", "userid = 4"),
+    # the word ILIKE inside a literal is data
+    ("r.userid, r.itemid, t.tag", "{ev} r JOIN pdtag t ON r.itemid = t.itemid",
+     "r.itemid TO r.userid ON r.ratingval",
+     "WHERE r.userid = 6 AND (t.tag = 'ILIKE x' OR t.tag ILIKE 'LAMP') "
+     "ORDER BY r.itemid", "userid = 6"),
 ]
 
 
@@ -112,8 +142,12 @@ def tables(spark, tmp_path_factory):
          (5, "red desk"), (6, "grey"), (7, "red cup"), (8, "tan"),
          (99, "red ghost")], "pid long, pname string") \
         .write.parquet(str(d / "dim"))
-    spark.read.parquet(str(d / "rat")).createOrReplaceTempView("pdrat")
-    spark.read.parquet(str(d / "dim")).createOrReplaceTempView("pddim")
+    # item 42 is in no other table
+    spark.createDataFrame(
+        [(1, "ILIKE x"), (4, "lamp"), (42, "orphan")],
+        "itemid long, tag string").write.parquet(str(d / "tag"))
+    for name in ("rat", "dim", "tag"):
+        spark.read.parquet(str(d / name)).createOrReplaceTempView("pd" + name)
 
 
 def _rounded(rows):
@@ -149,11 +183,18 @@ def test_pushed_where_matches_unfiltered_route(spark, tables, method):
     spark.catalog.dropTempView("pdref")
 
 
-def test_pushdown_split_rules():
+def _read(spark, frm, tail, qual="r"):
+    """The parsed statement ``SELECT * FROM <frm> RECOMMEND ... <tail>``
+    with the RECOMMEND columns qualified by ``qual``."""
+    q = (f"SELECT * FROM {frm} RECOMMEND {qual}.itemid TO {qual}.userid "
+         f"ON {qual}.ratingval USING ItemCosCF{tail}")
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    return _Statement(parser, _REC_RE.match(q))
+
+
+def test_pushdown_split_rules(spark):
     def push(frm, tail, qual="r"):
-        items = _parse_from(frm)
-        ev = next(it for it in items if it.alias == qual)
-        return _pushdown(tail, items, ev, "userid")[0]
+        return _read(spark, frm, tail, qual).pushdown()[0]
 
     # quoted spans neither end the WHERE nor lose their qualifier text
     assert push("ev r", " WHERE r.userid = 'r.x LIMIT 2' AND itemid < 3 "
@@ -173,32 +214,42 @@ def test_pushdown_split_rules():
     # AND/OR are words, whatever surrounds them
     assert push("ev r", " WHERE userid = 1 AND(itemid = 2)OR(itemid = 3)") \
         is None
-    assert push("ev r", " WHERE userid=1AND itemid = 2") is None
+    with pytest.raises(ParseException):
+        push("ev r", " WHERE userid=1AND itemid = 2")
     assert push("ev r", " WHERE userid = 1 AND(itemid = 2)") == "userid = 1"
-    # a CASE is one unit; unbalanced CASE/END pushes nothing
+    # a CASE is one conjunct; `end` after a qualifier or alone is a column
     assert push("ev r", " WHERE CASE WHEN itemid = 2 AND userid = 1 THEN 1 "
                 "END = 1 AND userid < 4") == "userid < 4"
     assert push("ev r, t q", " WHERE userid = 1 AND q.end = 2 "
                 "AND userid < 3") == "userid = 1 AND userid < 3"
-    assert push("ev r", " WHERE userid = 1 AND end = 2") is None
+    assert push("ev r", " WHERE userid = 1 AND end = 2") == "userid = 1"
     # backslash-escaped quotes stay inside their literal
     assert push("ev r", r" WHERE userid = 1 AND c = 'x\' AND userid = 3 "
                 r"AND '") == "userid = 1"
     assert push("ev r", r" WHERE userid = 'a\'' || itemid || ''") is None
-    # a comment can hide an OR from the scanner (``-- it's`` opens no
-    # quote for Spark), so a WHERE with one is neither pushed nor split;
-    # nor is one with an unclosed quote
+    # a comment hides nothing from the parser: the OR behind it is read
     hidden = "userid = 1 --'\n OR itemid = 4 -- '"
-    items = _parse_from("ev r")
-    assert _pushdown(" WHERE " + hidden, items, items[0], "userid") == \
-        (None, "none (comment)")
-    assert _split_where(hidden, "userid") == (None, hidden)
-    assert _split_where("userid = 'x", "userid") == (None, "userid = 'x")
+    assert _read(spark, "ev r", " WHERE " + hidden).pushdown() == \
+        (None, "none (OR)")
+    with pytest.raises(ParseException):
+        push("ev r", " WHERE userid = 'x")
     # an aliased table's own name qualifies another FROM item
     assert push("ml r JOIN ml ON r.itemid = ml.itemid",
                 " WHERE ml.userid = 3") is None
     assert push("ml JOIN ml2 r ON r.itemid = ml.itemid",
                 " WHERE ml.userid = 3", qual="ml") == "userid = 3"
+    # an OR of user predicates is one user-only conjunct
+    assert push("ev r", " WHERE (userid = 1 OR r.userid = 2) AND itemid < 7") \
+        == "(userid = 1 OR userid = 2)"
+    # the "(" of a predicate operand is in no span: not pushed
+    assert push("ev r", " WHERE (userid) IN (1, 2) AND userid < 9") == \
+        "userid < 9"
+    # Spark's join precedence: `a, b RIGHT JOIN c` is `(a, b) RIGHT JOIN c`
+    assert push("ev r, d RIGHT JOIN t ON d.i = t.i",
+                " WHERE r.userid IS NULL") is None
+    assert push("ev r NATURAL FULL JOIN t", " WHERE r.userid = 1") is None
+    assert push("ev r LEFT SEMI JOIN t ON r.itemid = t.i",
+                " WHERE r.userid = 1") == "userid = 1"
 
 
 def _pair_aggregate_rows(df) -> int:
@@ -254,6 +305,35 @@ def test_stored_item_cf_reads_model_once(spark, tmp_path):
     assert rs.last_pushdown == "none (materialized route)"
     assert plan_stats(df)["scans"] == 1
     assert len(df.collect()) == 4
+
+
+def test_inner_join_is_not_routed_to_the_capped_view(spark, tables, tmp_path):
+    # a join that drops user 3's top item needs the user's next one,
+    # which a RecView capped at one row per user never stored
+    rs = RecSQL(RecEngine(spark, workdir=str(tmp_path), verbose_queries=False))
+    rs.sql("CREATE RECOMMENDER pdv ON pdrat USERS FROM userid ITEMS FROM "
+           "itemid EVENTS FROM ratingval USING ItemCosCF")
+    alone = ("SELECT * FROM pdrat RECOMMEND itemid TO userid ON ratingval "
+             "USING ItemCosCF WHERE userid = 3 ORDER BY ratingval DESC LIMIT 1")
+    top = rs.sql(alone).collect()[0].itemid
+    spark.sql(f"SELECT DISTINCT itemid AS pid FROM pdrat WHERE itemid <> {top}") \
+        .createOrReplaceTempView("pdvd")
+    q = ("SELECT r.userid, r.itemid, r.ratingval FROM pdrat r "
+         "JOIN pdvd d ON r.itemid = d.pid RECOMMEND r.itemid TO r.userid "
+         "ON r.ratingval USING ItemCosCF WHERE r.userid = 3 "
+         "ORDER BY r.ratingval DESC LIMIT 1")
+    want = rs.sql(q).collect()
+    assert rs.last_strategy == "FilterRecommend" and want
+    rs.engine.materialize_predictions("pdv", spark.table("pdrat"), k=1)
+    assert _rounded(rs.sql(q).collect()) == _rounded(want)
+    assert rs.last_strategy == "FilterRecommend"
+    assert rs.sql(alone).collect()[0].itemid == top
+    assert rs.last_strategy == "IndexRecommend"
+    # a window over the capped view would count one row per user
+    scored = len(rs.sql(alone.replace("LIMIT 1", "LIMIT 99")).collect())
+    counted = alone.replace("SELECT *", "SELECT itemid, count(*) OVER () AS n")
+    assert rs.sql(counted).collect()[0].n == scored > 1
+    assert rs.last_strategy == "FilterRecommend"
 
 
 def test_explain_states_the_user_filter(spark, tables):
