@@ -24,6 +24,11 @@ from recdb_postgresql_spark.operators import cf, svd as svd_mod
 
 METHODS = ("itemcoscf", "itempearcf", "usercoscf", "userpearcf", "svd")
 
+# Spark's generated-class cache size (spark.sql.codegen.cache.maxEntries,
+# default 100): one pass of the on-the-fly CF statement mix compiles
+# ~225 distinct classes, plus ~8 per new literal user id; see get_spark
+CODEGEN_CACHE_ENTRIES = "1000"
+
 logger = logging.getLogger(__name__)
 
 
@@ -48,7 +53,21 @@ def get_spark(app: str = "recdb_spark", cpus: Optional[int] = None) -> SparkSess
     round trips (about two thirds of the 1,500-1,900 that building one
     on-the-fly RECOMMEND statement makes). Only error messages lose
     that call-site text; a session built with
-    ``spark.python.sql.dataFrameDebugging.enabled=true`` gets it back."""
+    ``spark.python.sql.dataFrameDebugging.enabled=true`` gets it back.
+
+    Spark's generated-class cache holds 1,000 classes instead of 100
+    (``spark.sql.codegen.cache.maxEntries``, a static conf: a caller
+    that builds its own session sets it there). Whole-stage codegen
+    compiles each stage's Java source with Janino and caches the class
+    by that source. One pass of the seven on-the-fly CF statement
+    shapes compiles about 225 distinct classes, and each new literal
+    user id adds about 8, so the default cache evicted the whole mix
+    before a shape came round again and every statement recompiled
+    26-29 classes (median over shapes, 300-900 ms); with the larger
+    cache it compiles 8 (item-CF 4-8, user-CF 12-22: int literals are
+    written into the generated code, so a new user id brings a few).
+    The cache is an LRU capped by entry count; driver peak RSS was the
+    same within noise."""
     n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     return (
         SparkSession.builder.master(f"local[{n}]")
@@ -62,6 +81,7 @@ def get_spark(app: str = "recdb_spark", cpus: Optional[int] = None) -> SparkSess
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
         .getOrCreate()
     )
 
@@ -101,6 +121,7 @@ def cluster_conf(events_tb: float = 100.0, executors: int = 1000,
         "spark.sql.autoBroadcastJoinThreshold": str(512 * 1024 * 1024),
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.sql.codegen.cache.maxEntries": CODEGEN_CACHE_ENTRIES,
     }
 
 

@@ -142,6 +142,34 @@ def _from_items(node, nulled: bool = False):
         yield from _from_items(child, nulled or k < 2 and sides[k])
 
 
+def _outer_block(node, at: int):
+    """The outermost SELECT under ``node`` whose span holds the place
+    ``at``, or None. The search enters no SELECT: the plan below one
+    is parsed from its own text, so a SELECT that does not hold ``at``
+    has none below it that does, and below one that does only a FROM
+    subquery can (``_subquery_holds``)."""
+    todo = [node]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() != "Project":
+            todo += _seq(node.children())
+            continue
+        lo, hi = _own_span(node)
+        if lo < at <= hi + 1:
+            return node
+    return None
+
+
+def _subquery_holds(item, at: int) -> bool:
+    """Whether the FROM item ``item`` is a subquery whose text holds
+    the place ``at``."""
+    if item.nodeName() != "SubqueryAlias" or \
+            item.child().nodeName() == "UnresolvedRelation":
+        return False
+    lo, hi = _own_span(item)
+    return lo < at <= hi
+
+
 def _conjuncts(cond) -> list:
     if cond.nodeName() == "And":
         return [c for k in _seq(cond.children()) for c in _conjuncts(k)]
@@ -166,25 +194,25 @@ class _Statement:
         # the query block whose FROM the RECOMMEND clause ended: the
         # innermost SELECT whose span holds that place (a set-op leg or
         # a FROM subquery when the clause sits in one)
-        self.block, todo = None, [self.plan]
-        while todo:
-            node = todo.pop()
-            if node.nodeName() == "Project":
-                lo, hi = _own_span(node)
-                if not lo < at <= hi + 1:
-                    continue
-                self.block = node
-            todo += _seq(node.children())
+        self.block = _outer_block(self.plan, at)
         if self.block is None:
             raise ValueError("RECOMMEND must follow the FROM of a SELECT")
-        below = self.block.child()
-        self.where = below.condition() if below.nodeName() == "Filter" else None
-        self.from_ = below.child() if self.where is not None else below
+        while True:
+            below = self.block.child()
+            self.where = (below.condition() if below.nodeName() == "Filter"
+                          else None)
+            self.from_ = below.child() if self.where is not None else below
+            items = list(_from_items(self.from_))
+            inner = next((_outer_block(it.child(), at) for it, _, _ in items
+                          if _subquery_holds(it, at)), None)
+            if inner is None:
+                break
+            self.block = inner
 
-        found = next((it for it in _from_items(self.from_)
+        found = next((it for it in items
                       if not qual or it[1].lower() == qual), None)
         if found is None:
-            names = [a for _, a, _ in _from_items(self.from_)]
+            names = [a for _, a, _ in items]
             raise ValueError(f"RECOMMEND qualifier {qual!r} not in FROM "
                              f"{names}")
         self.item, self.alias, self.null_supplied = found
@@ -226,6 +254,15 @@ class _Statement:
             return False
         return all(self._user_only(c, cuts) for c in _seq(node.children()))
 
+    def _reads_as(self, lo: int, hi: int, conj) -> bool:
+        """Whether ``plain[lo:hi + 1]`` parses as the expression
+        ``conj``."""
+        try:
+            return self.parser.parseExpression(
+                self.plain[lo:hi + 1]).equals(conj)
+        except ParseException:
+            return False
+
     def _pushed(self, conj) -> Optional[str]:
         """The text of a user-only conjunct, events alias cut, or None."""
         cuts: list = []
@@ -239,14 +276,13 @@ class _Statement:
             node = kids.apply(0)
             lo, kids = min(lo, _own_span(node)[0]), node.children()
         # the "(" of a parenthesized predicate operand is in no node's
-        # span (``(userid) IN (1)`` spans ``userid) IN (1)``): push only
-        # text that reads back as the conjunct
-        try:
-            if not self.parser.parseExpression(
-                    self.plain[lo:hi + 1]).equals(conj):
+        # span (``(userid) IN (1)`` spans ``userid) IN (1)``): widen the
+        # text leftwards over blanks and "(" until it reads back as the
+        # conjunct; push only text that does
+        while not self._reads_as(lo, hi, conj):
+            lo = len(self.plain[:lo].rstrip()) - 1
+            if lo < 0 or self.plain[lo] != "(":
                 return None
-        except ParseException:
-            return None
         text, at = "", lo
         for (a, b), col in sorted(cuts):
             text, at = text + self.plain[at:a] + col, b + 1

@@ -120,6 +120,12 @@ STATEMENTS = [
      "r.itemid TO r.userid ON r.ratingval",
      "WHERE r.userid = 6 AND (t.tag = 'ILIKE x' OR t.tag ILIKE 'LAMP') "
      "ORDER BY r.itemid", "userid = 6"),
+    # a parenthesized operand: no node's span holds its "("
+    ("r.userid, r.itemid, r.ratingval", "{ev} r",
+     "r.itemid TO r.userid ON r.ratingval",
+     "WHERE (r.userid) IN (2, 5) AND r.itemid < 7 "
+     "ORDER BY round(r.ratingval, 6) DESC, r.userid, r.itemid",
+     "(userid) IN (2, 5)"),
 ]
 
 
@@ -241,15 +247,26 @@ def test_pushdown_split_rules(spark):
     # an OR of user predicates is one user-only conjunct
     assert push("ev r", " WHERE (userid = 1 OR r.userid = 2) AND itemid < 7") \
         == "(userid = 1 OR userid = 2)"
-    # the "(" of a predicate operand is in no span: not pushed
+    # the "(" of a predicate operand is in no span: the text widens
+    # over it until it reads back as the conjunct
     assert push("ev r", " WHERE (userid) IN (1, 2) AND userid < 9") == \
-        "userid < 9"
+        "(userid) IN (1, 2) AND userid < 9"
+    assert push("ev r", " WHERE ( (r.userid)) IN (1) AND (itemid) < 2") == \
+        "( (userid)) IN (1)"
     # Spark's join precedence: `a, b RIGHT JOIN c` is `(a, b) RIGHT JOIN c`
     assert push("ev r, d RIGHT JOIN t ON d.i = t.i",
                 " WHERE r.userid IS NULL") is None
     assert push("ev r NATURAL FULL JOIN t", " WHERE r.userid = 1") is None
     assert push("ev r LEFT SEMI JOIN t ON r.itemid = t.i",
                 " WHERE r.userid = 1") == "userid = 1"
+    # a RECOMMEND in a FROM subquery belongs to that subquery's SELECT
+    inner = _Statement(
+        spark._jsparkSession.sessionState().sqlParser(), _REC_RE.match(
+            "SELECT * FROM t JOIN (SELECT * FROM ev r RECOMMEND r.itemid TO "
+            "r.userid ON r.ratingval USING ItemCosCF WHERE r.userid IN (1, 2)"
+            ") q ON t.i = q.itemid WHERE q.userid = 3"))
+    assert (inner.alias, inner.table, inner.pushdown()[0]) == \
+        ("r", "ev", "userid IN (1, 2)")
 
 
 def _pair_aggregate_rows(df) -> int:
