@@ -24,9 +24,8 @@ from recdb_postgresql_spark.operators import cf, svd as svd_mod
 
 METHODS = ("itemcoscf", "itempearcf", "usercoscf", "userpearcf", "svd")
 
-# Spark's generated-class cache size (spark.sql.codegen.cache.maxEntries,
-# default 100): one pass of the on-the-fly CF statement mix compiles
-# ~225 distinct classes, plus ~8 per new literal user id; see get_spark
+# spark.sql.codegen.cache.maxEntries (Spark's default: 100), sized in
+# get_spark for the on-the-fly CF statement mix
 CODEGEN_CACHE_ENTRIES = "1000"
 
 logger = logging.getLogger(__name__)
