@@ -65,8 +65,8 @@ def get_spark(app: str = "recdb_spark", cpus: Optional[int] = None) -> SparkSess
     26-29 classes (median over shapes, 300-900 ms); with the larger
     cache it compiles 8 (item-CF 4-8, user-CF 12-22: int literals are
     written into the generated code, so a new user id brings a few).
-    The cache is an LRU capped by entry count; driver peak RSS was the
-    same within noise."""
+    The cache is an LRU capped by entry count; peak RSS of the
+    benchmark runs was the same within noise."""
     n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     return (
         SparkSession.builder.master(f"local[{n}]")
